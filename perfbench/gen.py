@@ -49,11 +49,14 @@ class RunFile:
 
 
 def frame_arrays(rng: np.random.Generator, n_events: int, n_elinks: int,
-                 mean_hits: float = 4.0,
-                 filler_share: float = 0.1) -> dict[str, np.ndarray]:
+                 mean_hits: float = 3.0,
+                 filler_share: float = 1.0) -> dict[str, np.ndarray]:
     """Frame columns for one readout board: per event and elink a header
-    (the L1A counter) followed by its data frames, fillers sprinkled in,
-    one trailer at the end. Returned in wire order."""
+    (the L1A counter) followed by its data frames and, with probability
+    ``filler_share``, one filler; one trailer at the end. Returned in wire
+    order. The defaults follow ``examples/daq_session.py``'s run
+    synthesizer (header, three hits and one filler per event), with the
+    hit count drawn from a Poisson of the same mean."""
     n_groups = n_events * n_elinks
     hits = rng.poisson(mean_hits, n_groups)
     group_elink = np.tile(np.arange(n_elinks), n_events)

@@ -5,10 +5,12 @@
 
 Run from the root of a checkout. It starts one engine session
 (``local[4]``, 1 GiB driver heap), makes the workload's inputs from the
-seed, runs one discarded warm round of every op kind, then runs whole
+seed, runs discarded warm rounds of every op kind, then runs whole
 rounds of ops in a closed loop: as many rounds as fit ``--seconds`` at
 the workload's nominal round length, so runs of equal length do equal
-work. Output checks run after each op, outside the timed region; a failed
+work. The round count is fixed before the run starts; a run whose planned
+work would not end within the 180 s a run may take is refused up front.
+Output checks run after each op, outside the timed region; a failed
 check counts as a failed op.
 
 The last line of standard output is one JSON object:
@@ -42,7 +44,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".perfbench_work")
 CORES = 4
 HEAP = "1g"
-HARD_LIMIT_S = 150.0   # start no round past this, to exit within 180 s
+# nominal seconds of warm plus measured rounds a run may plan: session
+# start, input generation and teardown take the rest of its 180 s
+PLAN_LIMIT_S = 120.0
 LOCK_WAIT_S = 60.0
 
 END_TO_END = {
@@ -69,8 +73,6 @@ PER_LAYER = {
     "streaming.wal_commit_ms": "ms",
     "streaming.commit_offsets_ms": "ms",
     "streaming.latest_offset_ms": "ms",
-    "streaming.files_per_batch": "count",
-    "streaming.backlog_max_files": "count",
     "llm_dedup.merge_s": "s",
     "llm_dedup.retract_s": "s",
     "llm_dedup.indexed_query_s": "s",
@@ -231,18 +233,17 @@ def _mean(xs) -> float:
     return sum(xs) / len(xs) if xs else 0.0
 
 
-def run(args, run_dir: str) -> tuple[dict, dict]:
+def run(args, wl, run_dir: str) -> tuple[dict, dict]:
     import numpy as np
 
     from perfbench.trace import (HostSample, ProcTree, RssSampler,
                                  SparkCounters, Tracer)
-    from perfbench.workloads import WORKLOADS, Ctx
+    from perfbench.workloads import Ctx
 
     conf = _isolate(run_dir)
     host, tree, tracer = HostSample(), ProcTree(), Tracer(bool(args.trace))
     t_start = time.perf_counter()
     records, warm, failures = [], [], []
-    wl = WORKLOADS[args.workload]()
     counters = None
     overhead_s = 0.0
 
@@ -295,8 +296,9 @@ def run(args, run_dir: str) -> tuple[dict, dict]:
                   np.random.default_rng(args.seed), registry)
         try:
             wl.setup(ctx)
-            for kind in wl.kinds:
-                warm.append(do_op(ctx, -1 - len(warm), kind))
+            for _ in range(wl.warm_rounds):
+                for kind in wl.kinds:
+                    warm.append(do_op(ctx, -1 - len(warm), kind))
             setup_s = time.perf_counter() - t_start
             ctx.layer_counts.clear()
             if args.trace:
@@ -305,8 +307,6 @@ def run(args, run_dir: str) -> tuple[dict, dict]:
                 overhead_s += time.perf_counter() - t_read
             i = 0
             for _ in range(wl.rounds(args.seconds)):
-                if records and time.perf_counter() - t_start > HARD_LIMIT_S:
-                    break
                 for kind in wl.kinds:
                     records.append(do_op(ctx, i, kind))
                     i += 1
@@ -372,7 +372,7 @@ def _per_layer(tracer, counts: dict, records: list[dict], e2e: dict,
                 "pipelines", "pyds", "streaming", "llm_dedup", "operators"):
             out[key] = span_mean(key[:-2])
     for key, vals in counts.items():
-        out[key] = max(vals) if key.endswith("_max_files") else _mean(vals)
+        out[key] = _mean(vals)
     n = len(records)
     for key in ("jobs", "stages", "tasks", "shuffle_read_mb",
                 "shuffle_write_mb", "spill_mb", "executor_run_s",
@@ -411,10 +411,17 @@ def main(argv: list[str] | None = None) -> int:
         print(f"perfbench: unknown workload {args.workload!r}; "
               f"one of {sorted(WORKLOADS)}", file=sys.stderr)
         return 2
+    wl = WORKLOADS[args.workload]()
+    planned_s = (wl.rounds(args.seconds) + wl.warm_rounds) * wl.round_s
+    if planned_s > PLAN_LIMIT_S:
+        print(f"perfbench: --seconds {args.seconds:g} plans {planned_s:.0f} s "
+              f"of rounds for {args.workload}, over the {PLAN_LIMIT_S:.0f} s "
+              "a run may plan", file=sys.stderr)
+        return 2
     lock, args.lock_wait_s = acquire_lock()
     run_dir = tempfile.mkdtemp(prefix="run-", dir=WORK)
     try:
-        result, context = run(args, run_dir)
+        result, context = run(args, wl, run_dir)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
         lock.close()

@@ -23,7 +23,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
 sys.path.insert(0, ROOT)
 
 from perfbench import gen, run  # noqa: E402
-from perfbench.workloads import SQL_QUERIES  # noqa: E402
+from perfbench.workloads import SQL_QUERIES, WORKLOADS  # noqa: E402
 from project_etl_spark.decode import (blob_to_frames_pdf,  # noqa: E402
                                       encode_frames)
 from project_etl_spark.io import TABLES  # noqa: E402
@@ -40,7 +40,8 @@ def test_benchmark_json_matches_runner():
                          "end_to_end", "per_layer"}
     assert {m["name"]: m["unit"] for m in SPEC["end_to_end"]} == run.END_TO_END
     assert {m["name"]: m["unit"] for m in SPEC["per_layer"]} == run.PER_LAYER
-    assert {w["name"] for w in SPEC["workloads"]} == set(_SMOKE)
+    assert {w["name"] for w in SPEC["workloads"]} == set(_SMOKE) \
+        == set(WORKLOADS)
     setup = [m for m in SPEC["end_to_end"] if m["name"] == "setup_s"]
     assert setup and setup[0]["better"] == "lower"
     assert setup[0]["bound"] == max(m["bound"] for m in SPEC["end_to_end"])
@@ -120,6 +121,22 @@ def test_refuses_without_the_program(tmp_path):
         cwd=tmp_path, capture_output=True, text=True, timeout=120)
     assert p.returncode != 0
     assert '"metrics"' not in p.stdout
+
+
+@pytest.mark.parametrize("workload", sorted(WORKLOADS))
+def test_benchmark_run_length_is_within_plan(workload):
+    """The run length in BENCHMARK.json plans work a run can finish."""
+    wl = WORKLOADS[workload]()
+    planned = (wl.rounds(SPEC["run_seconds"]) + wl.warm_rounds) * wl.round_s
+    assert planned <= run.PLAN_LIMIT_S
+
+
+def test_refuses_work_it_cannot_finish(capsys):
+    """Too long a run is refused before any work starts, not cut short."""
+    assert run.main(["--workload", "daq_backlog", "--seed", "1",
+                     "--seconds", "3600", "--trace", "0"]) == 2
+    out = capsys.readouterr()
+    assert out.out == "" and "plans" in out.err
 
 
 # Small inputs so one smoke run takes about half a minute.
