@@ -99,7 +99,11 @@ def main() -> None:
         _q = (_r.load().writeStream.format("noop")
               .option("checkpointLocation", tempfile.mkdtemp())
               .trigger(availableNow=True).start())
-        _q.awaitTermination(60)
+        if not _q.awaitTermination(60):
+            _q.stop()
+            raise TimeoutError(
+                f"streaming warm-up {_opts or 'simple'} did not finish "
+                "within 60s")
 
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     warmup = (repeats > 1

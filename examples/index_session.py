@@ -38,7 +38,8 @@ def main() -> None:
     reg = load_all()
 
     from project_etl_spark.operators.llm_dedup import (
-        _fragment_stats, build_dedup_index, merge_dedup_index)
+        INDEX_FRAGMENTS, build_dedup_index, index_manifest,
+        merge_dedup_index)
 
     print("== pre-flight: hot-shingle audit (naive pair mass per df band) ==")
     reg["ext_shingle_hot_audit"].builder(spark, sf_dir) \
@@ -47,22 +48,7 @@ def main() -> None:
     docs = table(spark, sf_dir, "documents")
     print(f"== build the fragment index -> {workdir}/full ==")
     full = build_dedup_index(spark, docs, os.path.join(workdir, "full"))
-    frags = (
-        ("members", ("doc_id", "canon_id", "gsize")),
-        ("shingle_hashes", ("doc_id", "h60")),
-        ("signatures", ("doc_id", "k", "minhash")),
-        ("band_buckets", ("doc_id", "band", "bucket")),
-    )
-
-    def manifest(paths):
-        out = None
-        for name, cols in frags:
-            row = _fragment_stats(spark.read.parquet(paths[name]),
-                                  name, cols)
-            out = row if out is None else out.unionByName(row)
-        return out
-
-    manifest(full).orderBy("fragment").show(truncate=False)
+    index_manifest(spark, full).orderBy("fragment").show(truncate=False)
 
     print("== banding sweep OFF the persisted index ==")
     reg["ext_dedup_census_indexed"].builder(spark, sf_dir) \
@@ -72,10 +58,10 @@ def main() -> None:
     merged = merge_dedup_index(spark, docs, F.expr("doc_id % 19 = 2"),
                                os.path.join(workdir, "nightly"))
     m_inc = {r["fragment"]: tuple(r)
-             for r in manifest(merged).collect()}
+             for r in index_manifest(spark, merged).collect()}
     m_full = {r["fragment"]: tuple(r)
-              for r in manifest(full).collect()}
-    for name, _c in frags:
+              for r in index_manifest(spark, full).collect()}
+    for name in INDEX_FRAGMENTS:
         status = "IDENTICAL" if m_inc[name] == m_full[name] else "MISMATCH"
         print(f"   {name:16s} merge-vs-rebuild: {status} {m_inc[name][1:]}")
     assert m_inc == m_full, "incremental merge must equal full rebuild"

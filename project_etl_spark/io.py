@@ -60,30 +60,31 @@ def register_tables(spark: SparkSession, sf_dir: str,
     for name in TABLES:
         table(spark, sf_dir, name).createOrReplaceTempView(prefix + name)
 
-def _estimated_scan_splits(df: DataFrame) -> int:
-    """Conservative estimate of a file-backed plan's scan-partition count
-    from file METADATA only (no RDD materialization of the plan — on a
+def _estimated_scan_splits(spark: SparkSession, files: list[str]) -> int:
+    """Estimate a file-backed plan's scan-partition count from the METADATA
+    of its input ``files`` only (no RDD materialization of the plan — on a
     100 TB plan ``df.rdd`` would physically plan and wrap the whole tree
     just to read one number). Mirrors Spark's split sizing
     (``FilePartition.maxSplitBytes``): maxSplit = min(maxPartitionBytes,
     max(openCostInBytes, bytesPerCore)); each file contributes
-    ceil(size / maxSplit) splits (a lower bound — packing never merges
-    across that many, and unsplittable row groups only reduce it, which
-    errs toward spreading, never toward collapsing a parallel scan)."""
-    sc = df.sparkSession.sparkContext
+    ceil(size / maxSplit) splits. That is an UPPER bound: packing merges
+    small splits into one partition, and a split holding no row-group
+    midpoint reads nothing. So the estimate errs toward leaving a narrow
+    scan unspread, never toward a needless repartition of a wide one."""
+    sc = spark.sparkContext
     jconf = sc._jsc.hadoopConfiguration()
     jvm = sc._jvm
     sizes = []
-    for uri in df.inputFiles():
+    for uri in files:
         jpath = jvm.org.apache.hadoop.fs.Path(uri)
         fs = jpath.getFileSystem(jconf)
         sizes.append(fs.getFileStatus(jpath).getLen())
-    sconf = df.sparkSession._jsparkSession.sessionState().conf()
+    sconf = spark._jsparkSession.sessionState().conf()
     max_part = int(sconf.filesMaxPartitionBytes())
     open_cost = int(sconf.filesOpenCostInBytes())
     bytes_per_core = (sum(sizes) + open_cost * len(sizes)) \
         // max(1, sc.defaultParallelism)
-    max_split = min(max_part, max(open_cost, bytes_per_core))
+    max_split = max(1, min(max_part, max(open_cost, bytes_per_core)))
     return sum(-(-s // max_split) for s in sizes)
 
 
@@ -114,8 +115,9 @@ def spread_small_scan(df: DataFrame, spread_col: str = "doc_id") -> DataFrame:
     # File-backed plans are sized from file metadata; tiny in-memory demo
     # inputs (no files) fall back to the RDD partition count, where the
     # plan is trivially small.
-    if df.inputFiles():
-        splits = _estimated_scan_splits(df)
+    files = df.inputFiles()
+    if files:
+        splits = _estimated_scan_splits(df.sparkSession, files)
     else:
         splits = df.rdd.getNumPartitions()
     if splits >= n:

@@ -2140,17 +2140,61 @@ FROM buckets
 """.format(shingles=ngrams_sql(3, "docs_c"))
 
 
+#: The four audited fragments of the persisted dedup index, each with the
+#: columns its manifest row hashes (``_fragment_stats``). The fifth
+#: fragment, ``signatures_wide``, is the unaudited source that
+#: ``signatures`` and ``band_buckets`` are projected from.
+INDEX_FRAGMENTS = {
+    "members": ("doc_id", "canon_id", "gsize"),
+    "shingle_hashes": ("doc_id", "h60"),
+    "signatures": ("doc_id", "k", "minhash"),
+    "band_buckets": ("doc_id", "band", "bucket"),
+}
+
+
 def _parallel_writes(*thunks) -> None:
     """Run independent write actions concurrently from driver threads
     (guide §2.6): sibling fragment writes that each read only PERSISTED
     parents have no mutual dependency, so the later job's tasks back-fill
     executor slots freed by the earlier job's tail instead of waiting for
-    a full barrier per write."""
+    a full barrier per write. Every write finishes before this returns;
+    the first failure in submission order is raised, and each later one
+    is attached to it as a note instead of being lost."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
+        futures = [pool.submit(t) for t in thunks]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    for later in errors[1:]:
+        errors[0].add_note(f"a sibling write also failed: {later!r}")
+    if errors:
+        raise errors[0]
+
+
+def _write_projections(spark: SparkSession, paths: dict[str, str]) -> None:
+    """Write the two audited views of the persisted ``signatures_wide``
+    fragment: row-form ``signatures`` and the flagship ``band_buckets``
+    (rows_per_band=2). Both are per-row projections of the wide row and
+    neither reads the other, so their write jobs overlap."""
+    wide = spark.read.parquet(paths["signatures_wide"])
+    _parallel_writes(
+        lambda: (signatures_from_wide(wide)
+                 .write.mode("overwrite").parquet(paths["signatures"])),
+        lambda: (band_buckets_from_wide(wide, 2)
+                 .write.mode("overwrite").parquet(paths["band_buckets"])))
+
+
+def _rekey(df: DataFrame, rekey: DataFrame,
+           dead: DataFrame | None = None) -> DataFrame:
+    """``df`` with each canonical doc_id in the broadcast ``rekey`` map
+    (old, new) moved to its new id, after dropping the rows of the
+    ``dead`` doc_ids. Text is byte-identical within a duplicate group, so
+    only the key changes; every other column passes through."""
+    if dead is not None:
+        df = df.join(F.broadcast(dead), "doc_id", "left_anti")
+    return (df.join(F.broadcast(rekey), df["doc_id"] == F.col("old"), "left")
+            .select(F.coalesce("new", "doc_id").alias("doc_id"),
+                    *[c for c in df.columns if c != "doc_id"]))
 
 
 def build_dedup_index(spark: SparkSession, docs: DataFrame,
@@ -2159,9 +2203,9 @@ def build_dedup_index(spark: SparkSession, docs: DataFrame,
     the maintenance job SCALE.md prescribes for 100 TB, where every LSH
     consumer (flagship, census, band sweep, pagerank/recursive-CTE edge
     lists, resolution, incremental) re-deriving the shingle/signature
-    pipeline per query stops being free. Four fragments, each written
-    ONCE and derived from the previous fragment's PERSISTED copy (the
-    corpus-scale shingling pass runs exactly once per build):
+    pipeline per query stops being free. Five fragments, each written
+    ONCE and derived from a PERSISTED parent (the corpus-scale shingling
+    pass runs exactly once per build):
 
       members/         (doc_id, canon_id, gsize) exact-raw-text groups —
                        the collapse table that bounds every band join
@@ -2200,8 +2244,7 @@ def build_dedup_index(spark: SparkSession, docs: DataFrame,
     import os
 
     paths = {k: os.path.join(base, k)
-             for k in ("members", "shingle_hashes", "signatures",
-                       "signatures_wide", "band_buckets")}
+             for k in (*INDEX_FRAGMENTS, "signatures_wide")}
     fp = docs.select("doc_id", F.md5("text").alias("fp"))
     w = Window.partitionBy("fp")
     # fp is stored alongside the membership so a later incremental merge
@@ -2221,17 +2264,7 @@ def build_dedup_index(spark: SparkSession, docs: DataFrame,
     sh60 = spark.read.parquet(paths["shingle_hashes"])
     (minhash_wide(sh60.select("doc_id", (F.col("h60") % P).alias("h")))
      .write.mode("overwrite").parquet(paths["signatures_wide"]))
-    wide = spark.read.parquet(paths["signatures_wide"])
-    # signatures and band_buckets are DAG-SIBLINGS — both pure projections
-    # of the persisted wide fragment, neither reads the other — so their
-    # write jobs overlap (guide §2.6: actions are only sequential because
-    # the driver calls them sequentially). The shingle-once provenance is
-    # untouched: every fragment still derives from a persisted parent.
-    _parallel_writes(
-        lambda: (signatures_from_wide(wide)
-                 .write.mode("overwrite").parquet(paths["signatures"])),
-        lambda: (band_buckets_from_wide(wide, 2)
-                 .write.mode("overwrite").parquet(paths["band_buckets"])))
+    _write_projections(spark, paths)
     return paths
 
 
@@ -2253,6 +2286,17 @@ def _fragment_stats(df: DataFrame, name: str,
                     "checksum"))
 
 
+def index_manifest(spark: SparkSession, paths: dict[str, str]) -> DataFrame:
+    """The index's audit manifest: one ``_fragment_stats`` row per
+    audited fragment (``INDEX_FRAGMENTS``), each read back from its
+    PERSISTED parquet."""
+    from functools import reduce
+
+    return reduce(DataFrame.unionByName, [
+        _fragment_stats(spark.read.parquet(paths[name]), name, cols)
+        for name, cols in INDEX_FRAGMENTS.items()])
+
+
 @register("sink_dedup_index", oracle=_SINK_INDEX_SQL,
           tags=("ext", "dedup", "sink", "index"))
 def sink_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2268,24 +2312,12 @@ def sink_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     every dedup consumer reads columnar fragments instead of re-deriving
     the shingle pipeline. At sf0.1 the build is ~4 s (the measured
     recompute-vs-materialize crossover numbers live in SCALE.md)."""
-    import os
-
     from project_etl_spark.io import scratch_dir
 
     ensure_deterministic(spark)
     docs = table(spark, sf_dir, "documents")
-    paths = build_dedup_index(spark, docs, scratch_dir("dedup_index"))
-    frags = (
-        ("members", ("doc_id", "canon_id", "gsize")),
-        ("shingle_hashes", ("doc_id", "h60")),
-        ("signatures", ("doc_id", "k", "minhash")),
-        ("band_buckets", ("doc_id", "band", "bucket")),
-    )
-    out = None
-    for name, cols in frags:
-        row = _fragment_stats(spark.read.parquet(paths[name]), name, cols)
-        out = row if out is None else out.unionByName(row)
-    return out
+    return index_manifest(
+        spark, build_dedup_index(spark, docs, scratch_dir("dedup_index")))
 
 
 def _census_indexed_block(rows: int) -> str:
@@ -2435,9 +2467,11 @@ def merge_dedup_index(spark: SparkSession, docs: DataFrame, is_delta,
                      REKEYED via a broadcast old->new map; brand-new
                      groups are shingled from their canonical delta doc
                      (the only text-sized work, sized by the ingest)
-      signatures /   same pass-through + rekey + delta-derived append
-      band_buckets   (bucket keys are content-derived, so rekeying the
-                     doc_id column is exact)
+      signatures_wide the same pass-through + rekey, plus the brand-new
+                     groups' wide rows from the merged shingle_hashes
+      signatures /   projected from the merged signatures_wide, exactly
+      band_buckets   as ``build_dedup_index`` does (a per-row projection
+                     commutes with a doc_id rekey)
 
     The contract is the strongest one available: the merged index is
     BIT-IDENTICAL to a full rebuild over archive+delta (pinned by
@@ -2473,57 +2507,32 @@ def merge_dedup_index(spark: SparkSession, docs: DataFrame, is_delta,
      .write.mode("overwrite").parquet(paths["members"]))
 
     # groups whose canonical representative moved: old -> new key map
-    # (sized by touched groups); brand-new groups: canonical delta docs
+    # (sized by touched groups); brand-new groups (no archive match): the
+    # only rows whose content must be DERIVED rather than rekeyed
     rekey = (gmap.where(F.col("acanon").isNotNull()
                         & (F.col("new_canon") != F.col("acanon")))
              .select(F.col("acanon").alias("old"),
                      F.col("new_canon").alias("new")))
-    new_canon_docs = delta_docs.join(
-        gmap.where(F.col("acanon").isNull())
-        .select(F.col("new_canon").alias("doc_id")),
-        "doc_id", "left_semi")
+    new_canon_ids = (gmap.where(F.col("acanon").isNull())
+                     .select(F.col("new_canon").alias("doc_id")))
 
-    def _rekeyed(df: DataFrame) -> DataFrame:
-        return (df.join(F.broadcast(rekey),
-                        df["doc_id"] == F.col("old"), "left")
-                .select(F.coalesce("new", "doc_id").alias("doc_id"),
-                        *[c for c in df.columns if c != "doc_id"]))
-
-    sh_a = spark.read.parquet(arch["shingle_hashes"])
-    sh_new = (word_ngrams(new_canon_docs)
+    sh_new = (word_ngrams(delta_docs.join(new_canon_ids, "doc_id",
+                                          "left_semi"))
               .select("doc_id", F.expr(_H60_RAW.format(col="sh"))
                       .alias("h60"))
               .distinct())
-    (_rekeyed(sh_a).unionByName(sh_new)
+    (_rekey(spark.read.parquet(arch["shingle_hashes"]), rekey)
+     .unionByName(sh_new)
      .write.mode("overwrite").parquet(paths["shingle_hashes"]))
 
-    # brand-new groups (no archive match): the only rows whose
-    # signature/bucket content must be DERIVED rather than rekeyed.
-    new_canon_ids = (gmap.where(F.col("acanon").isNull())
-                     .select(F.col("new_canon").alias("doc_id")))
-    wide_a = spark.read.parquet(arch["signatures_wide"])
     wide_new = minhash_wide(
         spark.read.parquet(paths["shingle_hashes"])
         .join(new_canon_ids, "doc_id", "left_semi")
         .select("doc_id", (F.col("h60") % P).alias("h")))
-    (_rekeyed(wide_a).unionByName(wide_new)
+    (_rekey(spark.read.parquet(arch["signatures_wide"]), rekey)
+     .unionByName(wide_new)
      .write.mode("overwrite").parquet(paths["signatures_wide"]))
-    wide_m = spark.read.parquet(paths["signatures_wide"])
-
-    # row-form signatures and band buckets are siblings: both derive from
-    # the persisted merged wide fragment + the archive fragment — overlap
-    # their write jobs (guide §2.6; provenance DAG unchanged).
-    sig_a = spark.read.parquet(arch["signatures"])
-    sig_new = signatures_from_wide(
-        wide_m.join(new_canon_ids, "doc_id", "left_semi"))
-    bb_a = spark.read.parquet(arch["band_buckets"])
-    bb_new = band_buckets_from_wide(
-        wide_m.join(new_canon_ids, "doc_id", "left_semi"), 2)
-    _parallel_writes(
-        lambda: (_rekeyed(sig_a).unionByName(sig_new)
-                 .write.mode("overwrite").parquet(paths["signatures"])),
-        lambda: (_rekeyed(bb_a).unionByName(bb_new)
-                 .write.mode("overwrite").parquet(paths["band_buckets"])))
+    _write_projections(spark, paths)
     return paths
 
 
@@ -2543,19 +2552,8 @@ def sink_dedup_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_etl_spark.io import scratch_dir
 
     docs = table(spark, sf_dir, "documents")
-    paths = merge_dedup_index(spark, docs, F.expr(_DELTA_PRED),
-                              scratch_dir("dedup_index_merge"))
-    frags = (
-        ("members", ("doc_id", "canon_id", "gsize")),
-        ("shingle_hashes", ("doc_id", "h60")),
-        ("signatures", ("doc_id", "k", "minhash")),
-        ("band_buckets", ("doc_id", "band", "bucket")),
-    )
-    out = None
-    for name, cols in frags:
-        row = _fragment_stats(spark.read.parquet(paths[name]), name, cols)
-        out = row if out is None else out.unionByName(row)
-    return out
+    return index_manifest(spark, merge_dedup_index(
+        spark, docs, F.expr(_DELTA_PRED), scratch_dir("dedup_index_merge")))
 
 
 sink_dedup_index_merge.__doc__ = sink_dedup_index_merge.__doc__.format(
@@ -2788,14 +2786,13 @@ def retract_dedup_index(spark: SparkSession, docs: DataFrame, is_removed,
     the GDPR / right-to-be-forgotten / licensing-takedown job, the one
     index maintenance path `build`/`merge` do not cover. The retracted
     index pays ZERO text work (retraction is strictly metadata): rows
-    for removed docs drop from `members`; a group whose canonical
-    REPRESENTATIVE was removed but which still has survivors rekeys its
-    fragment rows to the new minimum via a broadcast old->new map
-    (byte-identical text within a group, so shingle/signature/bucket
-    content is untouched — only the key changes, the same rekey move
-    `merge_dedup_index` uses for canonical handoffs); a group with no
-    survivors drops its fragment rows outright (broadcast anti-join,
-    sized by dead groups).
+    for removed docs drop from `members`; in `shingle_hashes` and
+    `signatures_wide`, a group whose canonical REPRESENTATIVE was removed
+    but which still has survivors rekeys its rows to the new minimum (the
+    `_rekey` move `merge_dedup_index` uses for canonical handoffs), and a
+    group with no survivors drops its rows outright (broadcast anti-join,
+    sized by dead groups). `signatures` and `band_buckets` are then
+    projected from the retracted `signatures_wide`, as in a build.
 
     Contract: BIT-IDENTICAL to a full rebuild over the surviving
     corpus (pinned by ``sink_dedup_index_retract``'s oracle, which
@@ -2838,21 +2835,15 @@ def retract_dedup_index(spark: SparkSession, docs: DataFrame, is_removed,
     dead = (old_c.join(new_stat, "fp", "left_anti")
             .select(F.col("old").alias("doc_id")))
 
-    def _fixed(df: DataFrame) -> DataFrame:
-        return (df.join(F.broadcast(dead), "doc_id", "left_anti")
-                .join(F.broadcast(rekey),
-                      df["doc_id"] == F.col("old"), "left")
-                .select(F.coalesce("new", "doc_id").alias("doc_id"),
-                        *[c for c in df.columns if c != "doc_id"]))
+    def rewrite(fr: str) -> None:
+        (_rekey(spark.read.parquet(arch[fr]), rekey, dead)
+         .write.mode("overwrite").parquet(paths[fr]))
 
-    # the four rekey rewrites are mutual siblings: each reads ONE archive
-    # fragment plus the broadcast dead/rekey maps (already materialized by
-    # the members write above) — overlap their write jobs (guide §2.6).
-    _parallel_writes(*[
-        (lambda fr: lambda: (_fixed(spark.read.parquet(arch[fr]))
-                             .write.mode("overwrite").parquet(paths[fr])))(f)
-        for f in ("shingle_hashes", "signatures", "signatures_wide",
-                  "band_buckets")])
+    # the two rekey rewrites are siblings: each reads ONE archive fragment
+    # plus the broadcast dead/rekey maps — overlap their write jobs
+    _parallel_writes(lambda: rewrite("shingle_hashes"),
+                     lambda: rewrite("signatures_wide"))
+    _write_projections(spark, paths)
     return paths
 
 
@@ -2881,19 +2872,9 @@ def sink_dedup_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_etl_spark.io import scratch_dir
 
     docs = table(spark, sf_dir, "documents")
-    paths = retract_dedup_index(spark, docs, F.expr(_RETRACT_PRED),
-                                scratch_dir("dedup_index_retract"))
-    frags = (
-        ("members", ("doc_id", "canon_id", "gsize")),
-        ("shingle_hashes", ("doc_id", "h60")),
-        ("signatures", ("doc_id", "k", "minhash")),
-        ("band_buckets", ("doc_id", "band", "bucket")),
-    )
-    out = None
-    for name, cols in frags:
-        row = _fragment_stats(spark.read.parquet(paths[name]), name, cols)
-        out = row if out is None else out.unionByName(row)
-    return out
+    return index_manifest(spark, retract_dedup_index(
+        spark, docs, F.expr(_RETRACT_PRED),
+        scratch_dir("dedup_index_retract")))
 
 
 sink_dedup_index_retract.__doc__ = sink_dedup_index_retract.__doc__.format(

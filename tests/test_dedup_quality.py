@@ -748,26 +748,74 @@ def test_index_merge_equals_full_rebuild_with_canon_handoff(spark, tmp_path):
 
 
 def test_index_wide_fragment_is_source_of_truth(spark, tmp_path):
-    """Round 13: the persisted signatures_wide fragment must reproduce
-    BOTH audited signature views exactly — posexploding it equals the
-    persisted row-form signatures fragment, and re-banding it equals the
-    persisted band_buckets fragment — so the wide layout's content is
-    certified transitively by the manifest's checksums."""
+    """The persisted signatures_wide fragment must reproduce BOTH audited
+    signature views exactly — posexploding it equals the persisted
+    row-form signatures fragment, and re-banding it equals the persisted
+    band_buckets fragment — so the wide layout's content is certified
+    transitively by the manifest's checksums. Merge and retract rewrite
+    the wide fragment themselves, so their outputs must hold it too, and
+    it must equal the wide fragment of a rebuild over the same docs."""
     from project_etl_spark.operators.llm_dedup import (
-        band_buckets_from_wide, build_dedup_index, signatures_from_wide)
+        band_buckets_from_wide, build_dedup_index, merge_dedup_index,
+        retract_dedup_index, signatures_from_wide)
 
     rows = [(i, "copyright notice all rights reserved " * 4)
             for i in range(5)]
     rows += [(100 + i, " ".join(BASE) + f" tail{i}") for i in range(4)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    p = build_dedup_index(spark, docs, str(tmp_path / "idx"))
-    wide = spark.read.parquet(p["signatures_wide"])
-    assert (sorted(map(tuple, signatures_from_wide(wide).collect()))
-            == sorted(map(tuple,
-                          spark.read.parquet(p["signatures"]).collect())))
-    assert (sorted(map(tuple, band_buckets_from_wide(wide, 2).collect()))
-            == sorted(map(tuple,
-                          spark.read.parquet(p["band_buckets"]).collect())))
+    # the merge delta undercuts the boilerplate group's canon and adds a
+    # new singleton; the takedown removes that canon and the singleton
+    picked = F.col("doc_id").isin(0, 3, 101)
+    jobs = {
+        "build": (build_dedup_index(spark, docs, str(tmp_path / "b")),
+                  docs),
+        "merge": (merge_dedup_index(spark, docs, picked,
+                                    str(tmp_path / "m")), docs),
+        "retract": (retract_dedup_index(spark, docs, picked,
+                                        str(tmp_path / "r")),
+                    docs.where(~picked)),
+    }
+
+    def rows_of(df):
+        return sorted(map(tuple, df.collect()))
+
+    for job, (p, survivors) in jobs.items():
+        wide = spark.read.parquet(p["signatures_wide"])
+        assert (rows_of(signatures_from_wide(wide))
+                == rows_of(spark.read.parquet(p["signatures"]))), job
+        assert (rows_of(band_buckets_from_wide(wide, 2))
+                == rows_of(spark.read.parquet(p["band_buckets"]))), job
+        reb = build_dedup_index(spark, survivors, str(tmp_path / job))
+        assert rows_of(wide) == rows_of(
+            spark.read.parquet(reb["signatures_wide"])), job
+
+
+def test_parallel_writes_waits_for_all_and_keeps_every_error():
+    """_parallel_writes must wait for every thunk, raise the FIRST error
+    in submission order (not completion order), and attach each later
+    error as a note instead of dropping it."""
+    import time
+
+    from project_etl_spark.operators.llm_dedup import _parallel_writes
+
+    done = []
+
+    def fails_late():
+        time.sleep(0.2)
+        raise ValueError("first submitted")
+
+    def slow_ok():
+        time.sleep(0.5)
+        done.append(True)
+
+    def fails_early():
+        raise KeyError("second submitted")
+
+    with pytest.raises(ValueError, match="first submitted") as err:
+        _parallel_writes(fails_late, slow_ok, fails_early)
+    assert done == [True]
+    notes = getattr(err.value, "__notes__", [])
+    assert len(notes) == 1 and "second submitted" in notes[0], notes
 
 
 def test_index_merge_edge_cases_empty_delta_and_empty_archive(spark, tmp_path):
@@ -1132,5 +1180,5 @@ def test_spread_small_scan_is_scale_adaptive(spark):
     d = tempfile.mkdtemp()
     small.write.mode("overwrite").parquet(d)
     scan = spark.read.parquet(d)
-    assert _estimated_scan_splits(scan) >= 1
+    assert _estimated_scan_splits(spark, scan.inputFiles()) >= 1
     assert spread_small_scan(scan).rdd.getNumPartitions() == n

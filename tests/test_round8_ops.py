@@ -259,6 +259,14 @@ def test_stream_hdr_buckets_state_is_bounded_and_complete(spark):
             2 ** ((r["bucket"] + 0.5) / 4) * 1e3 + 0.5)
 
 
+def _manifest(spark, paths) -> dict:
+    """{fragment: (fragment, n_rows, n_docs, checksum)} of an index."""
+    from project_etl_spark.operators.llm_dedup import index_manifest
+
+    return {r["fragment"]: tuple(r)
+            for r in index_manifest(spark, paths).collect()}
+
+
 def test_retract_equals_rebuild_across_topologies(spark, tmp_path):
     """Planted corpus with all three retraction topologies: a 5-copy
     group losing its CANONICAL member (rekey), a group removed
@@ -268,7 +276,7 @@ def test_retract_equals_rebuild_across_topologies(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from project_etl_spark.operators.llm_dedup import (
-        _fragment_stats, build_dedup_index, retract_dedup_index)
+        build_dedup_index, retract_dedup_index)
 
     boiler = "copyright acme corp all rights reserved " * 5
     other = "completely different words entirely " * 6
@@ -284,18 +292,7 @@ def test_retract_equals_rebuild_across_topologies(spark, tmp_path):
                               str(tmp_path / "ret"))
     reb = build_dedup_index(spark, docs.where(~removed_pred),
                             str(tmp_path / "reb"))
-    frags = (
-        ("members", ("doc_id", "canon_id", "gsize")),
-        ("shingle_hashes", ("doc_id", "h60")),
-        ("signatures", ("doc_id", "k", "minhash")),
-        ("band_buckets", ("doc_id", "band", "bucket")),
-    )
-    for name, cols in frags:
-        a = _fragment_stats(spark.read.parquet(ret[name]), name,
-                            cols).first()
-        b = _fragment_stats(spark.read.parquet(reb[name]), name,
-                            cols).first()
-        assert tuple(a) == tuple(b), (name, tuple(a), tuple(b))
+    assert _manifest(spark, ret) == _manifest(spark, reb)
     # the rekey actually happened: new canon of the boiler group is 10
     m = {r["doc_id"]: r["canon_id"]
          for r in spark.read.parquet(ret["members"]).collect()}
@@ -386,8 +383,7 @@ def test_merge_then_retract_composes_to_rebuild(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from project_etl_spark.operators.llm_dedup import (
-        _fragment_stats, build_dedup_index, merge_dedup_index,
-        retract_dedup_index)
+        build_dedup_index, merge_dedup_index, retract_dedup_index)
 
     boiler = "shared boilerplate page body repeated verbatim " * 4
     rows = [(i, boiler) for i in (2, 9, 16)]             # archive group
@@ -408,26 +404,10 @@ def test_merge_then_retract_composes_to_rebuild(spark, tmp_path):
                               str(tmp_path / "r"))
     reb = build_dedup_index(spark, merged_docs.where(~removed),
                             str(tmp_path / "b"))
-    frags = (
-        ("members", ("doc_id", "canon_id", "gsize")),
-        ("shingle_hashes", ("doc_id", "h60")),
-        ("signatures", ("doc_id", "k", "minhash")),
-        ("band_buckets", ("doc_id", "band", "bucket")),
-    )
-    for name, cols in frags:
-        a = _fragment_stats(spark.read.parquet(ret[name]), name,
-                            cols).first()
-        b = _fragment_stats(spark.read.parquet(reb[name]), name,
-                            cols).first()
-        assert tuple(a) == tuple(b), (name, tuple(a), tuple(b))
+    assert _manifest(spark, ret) == _manifest(spark, reb)
     # the merged index agreed with a full build too (merge contract)
     full = build_dedup_index(spark, docs, str(tmp_path / "f"))
-    for name, cols in frags:
-        a = _fragment_stats(spark.read.parquet(merged[name]), name,
-                            cols).first()
-        b = _fragment_stats(spark.read.parquet(full[name]), name,
-                            cols).first()
-        assert tuple(a) == tuple(b), ("merge:" + name, tuple(a), tuple(b))
+    assert _manifest(spark, merged) == _manifest(spark, full)
     # boiler group canonical handoff: 2 removed -> canon is now 9
     m = {r["doc_id"]: r["canon_id"]
          for r in spark.read.parquet(ret["members"]).collect()}

@@ -33,6 +33,7 @@ import duckdb  # noqa: E402
 from project_etl_spark.io import TABLES  # noqa: E402
 from project_etl_spark.registry import load_all  # noqa: E402
 from project_etl_spark.session import get_spark  # noqa: E402
+from tools import gen_evidence  # noqa: E402
 
 _KIND = {
     "tinyint": "i", "smallint": "i", "int": "i", "bigint": "i",
@@ -180,6 +181,9 @@ def main() -> int:
         json.dump(artifact, f, indent=1)
     print(f"{len(names) - n_fail}/{len(names)} green -> {args.out} "
           f"({artifact['total_sec']}s)")
+    # EVIDENCE.md cites the newest committed sweep artifact, so every
+    # artifact write must refresh the ledger or it goes stale
+    gen_evidence.main()
     return 1 if n_fail else 0
 
 
