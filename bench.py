@@ -90,20 +90,12 @@ def main() -> None:
     # 5): the first streaming query of a session additionally pays
     # one-time Structured-Streaming + streaming-python-runner init that is
     # session overhead, not per-query cost. One availableNow drain of the
-    # same tiny dir through the noop sink warms both the simple and the
-    # partitioned streaming readers.
-    for _opts in ({}, {"streaming": "partitioned"}):
-        _r = spark.readStream.format("etl_runfiles").option("path", _d)
-        for _k, _v in _opts.items():
-            _r = _r.option(_k, _v)
-        _q = (_r.load().writeStream.format("noop")
-              .option("checkpointLocation", tempfile.mkdtemp())
-              .trigger(availableNow=True).start())
-        if not _q.awaitTermination(60):
-            _q.stop()
-            raise TimeoutError(
-                f"streaming warm-up {_opts or 'simple'} did not finish "
-                "within 60s")
+    # same tiny dir through the noop sink warms the stream reader.
+    from project_etl_spark.streaming import drain
+    drain(spark.readStream.format("etl_runfiles").option("path", _d).load()
+          .writeStream.format("noop")
+          .option("checkpointLocation", tempfile.mkdtemp())
+          .trigger(availableNow=True).start())
 
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
     warmup = (repeats > 1

@@ -27,6 +27,7 @@ from project_etl_spark.pipelines import (enrich_runs_with_env,
                                          load_or_calibrate, run_stats,
                                          threshold_heatmap)
 from project_etl_spark.session import get_spark
+from project_etl_spark.streaming import drain
 from project_etl_spark.streaming.watchdog import await_pairs, start_watchdog
 
 CONFIG = """
@@ -86,8 +87,7 @@ def main() -> None:
             synthesize_run(landing, run, rb)
 
     # 3. Watchdog: decode + merge to columnar, checkpointed exactly-once
-    q = start_watchdog(spark, landing, decoded, ckpt)
-    q.awaitTermination(120)
+    drain(start_watchdog(spark, landing, decoded, ckpt))
     frames = spark.read.parquet(decoded)
     print(f"== decoded {frames.count()} frames across "
           f"{frames.select('run').distinct().count()} runs ==")

@@ -149,32 +149,39 @@ def blob_to_frames_pdf(path: str, blob: bytes,
     })
 
 
-def decode_run_files(spark: SparkSession, path_glob: str,
-                     drop_filler: bool = True) -> DataFrame:
-    """Binary run files -> typed frame DataFrame.
-
-    ``binaryFile`` source gives (path, content); each task decodes its files
-    with one vectorized numpy pass (the reference's block-wise FIFO reads,
-    DAQ_self-triggering.md:197-209, re-expressed as Arrow batches). Filler
-    suppression mirrors the firmware's early discard
-    (Documentation-Self-Triggering.html:51) — done before anything shuffles.
-
-    Scale: files are split units (one task per file; ~1 run file each), so
-    1000 executors decode 1000 runs concurrently; no driver involvement.
-    """
+def decode_binary_frames(binary: DataFrame,
+                         drop_filler: bool = True) -> DataFrame:
+    """A ``binaryFile`` (path, content) frame, batch or streaming -> typed
+    frame rows. The one decode step of both paths: each task decodes its
+    files with one vectorized numpy pass (the reference's block-wise FIFO
+    reads, DAQ_self-triggering.md:197-209, re-expressed as Arrow batches).
+    Filler suppression mirrors the firmware's early discard
+    (Documentation-Self-Triggering.html:51) — done before anything
+    shuffles."""
     from project_etl_spark.session import _ship_package
-    _ship_package(spark)  # mapInPandas closure references this package
-    binary = (spark.read.format("binaryFile")
-              .option("pathGlobFilter", "*.dat")
-              .load(path_glob)
-              .select("path", "content"))
+    _ship_package(binary.sparkSession)  # the closure references this package
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, blob in zip(pdf["path"], pdf["content"]):
                 yield blob_to_frames_pdf(path, blob, drop_filler)
 
-    return binary.mapInPandas(run, DECODED_FRAME_SCHEMA)
+    return (binary.select("path", "content")
+            .mapInPandas(run, DECODED_FRAME_SCHEMA))
+
+
+def decode_run_files(spark: SparkSession, path_glob: str,
+                     drop_filler: bool = True) -> DataFrame:
+    """Binary run files -> typed frame DataFrame (``decode_binary_frames``
+    over a batch ``binaryFile`` scan).
+
+    Scale: files are split units (one task per file; ~1 run file each), so
+    1000 executors decode 1000 runs concurrently; no driver involvement.
+    """
+    binary = (spark.read.format("binaryFile")
+              .option("pathGlobFilter", "*.dat")
+              .load(path_glob))
+    return decode_binary_frames(binary, drop_filler)
 
 
 def build_hits(frames: DataFrame) -> DataFrame:

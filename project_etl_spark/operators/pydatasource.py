@@ -3,7 +3,7 @@ format (``output_run_{run}_rb{rb}.dat``, DAQ_self-triggering.md:233-234)
 exposed as a first-class table format, batch AND streaming, via
 ``project_etl_spark.pyds``.
 
-Three registered queries, all hash-checked:
+Six registered queries, all hash-checked:
 
 - ``scan_python_datasource`` — batch read through the custom format
   (partition-per-file, Arrow-batch decode), then the standard event build;
@@ -14,12 +14,13 @@ Three registered queries, all hash-checked:
   ``pushFilters`` prunes whole files from run/rb predicates before a byte
   is read (the Python-source analog of partition pruning); census pinned
   to the golden-frame counts.
-- ``source_python_datasource_stream`` — the streaming side: offsets are
-  indexes into the sorted landing-dir listing (the watchdog's consumed-file
-  ledger as a replayable offset), sunk to parquet through a checkpoint;
-  census pinned to the golden-frame counts.
-- ``stream_python_datasource_partitioned`` — the partitioned streaming
-  path (decode on executors, late file admitted via the checkpoint).
+- ``source_python_datasource_stream`` — the streaming side: the offset
+  is the ledger of admitted landing-dir files (the watchdog's
+  consumed-file ledger as a replayable offset), each new file decoded on
+  an executor and sunk to parquet through a checkpoint; census pinned to
+  the golden-frame counts.
+- ``stream_python_datasource_partitioned`` — the same reader across a
+  restart: a late file is admitted exactly once via the checkpoint.
 - ``sink_python_datasource`` — the WRITE side (``DataSourceWriter`` with
   two-phase commit); proof is a full reader->writer->reader roundtrip
   hash-checked against the golden census (byte-identity pinned in
@@ -43,6 +44,7 @@ from project_etl_spark.io import scratch_dir as _scratch
 from project_etl_spark.pyds import register_datasource
 from project_etl_spark.registry import register
 from project_etl_spark.session import ensure_deterministic
+from project_etl_spark.streaming import drain, parquet_sink
 from project_etl_spark.operators.streaming_live import (
     _few_shuffle_partitions,
     _golden_run_files,
@@ -61,19 +63,6 @@ _GOLDEN_CENSUS_ORACLE = """
 def _census(df: DataFrame) -> DataFrame:
     return df.groupBy("run", "rb", "kind").agg(
         F.count(F.lit(1)).alias("n_frames"))
-
-
-def _drain_or_fail(q, timeout_sec: int = 120) -> None:
-    """Await an ``availableNow`` drain, FAILING on timeout instead of
-    falling through: ``awaitTermination(t)`` returns False when the query
-    is still running, and reading the sink under a live query would hand
-    downstream a partial census from a leaked query (round-13 advice).
-    The query is stopped before raising so no stream outlives the
-    builder."""
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"streaming drain did not finish within {timeout_sec}s")
 
 
 @register(
@@ -133,18 +122,15 @@ def scan_python_datasource_pruned(spark: SparkSession, sf_dir: str) -> DataFrame
           tags=("streaming", "source", "datasource"))
 def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read through the custom Python DataSource
-    (``SimpleDataSourceStreamReader``): the offset is a monotonic ledger
-    of admitted filenames — the watchdog's consumed-file ledger
+    (``DataSourceStreamReader``): the offset is a monotonic ledger of
+    admitted filenames — the watchdog's consumed-file ledger
     (DAQ_self-triggering.md:306-311) as a replayable checkpoint offset,
     giving exactly-once file admission under ANY arrival order (a run
     file landing late, with a name sorting before already-admitted ones,
     is admitted exactly once on the next micro-batch). All four golden
-    files are present at start, so an ``availableNow`` drain admits them
-    in the first micro-batch and terminates deterministically
-    (optimization round 12: replaces a 1 s processing-time trigger +
-    0.5 s sink-polling loop that paid several wall-seconds of pure wait
-    per invocation; same admitted files, same sunk rows, same census),
-    then the census is hash-checked."""
+    files are present at start, so one ``availableNow`` drain admits them
+    and terminates deterministically (no processing-time trigger, no
+    sink polling), then the census is hash-checked."""
     ensure_deterministic(spark)
     base = _scratch("pyds_stream")
     landing = os.path.join(base, "landing")
@@ -154,12 +140,9 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
     _golden_run_files(landing)
     register_datasource(spark)
     with _few_shuffle_partitions(spark):
-        q = (spark.readStream.format("etl_runfiles").option("path", landing)
-             .load()
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        _drain_or_fail(q)
+        frames = (spark.readStream.format("etl_runfiles")
+                  .option("path", landing).load())
+        drain(parquet_sink(frames, out, ckpt).start())
     return _census(spark.read.parquet(out))
 
 
@@ -182,20 +165,15 @@ _PARTITIONED_STREAM_ORACLE = """
           tags=("streaming", "source", "datasource"))
 def stream_python_datasource_partitioned(spark: SparkSession,
                                          sf_dir: str) -> DataFrame:
-    """The SCALE streaming path of the custom format
-    (``DataSourceStreamReader``, ``.option("streaming", "partitioned")``):
-    the driver only lists the landing dir per micro-batch — each
-    newly-landed run file becomes one InputPartition decoded ON EXECUTORS
-    as Arrow batches, so a burst of landed files fans out across a fleet
-    (vs the simple reader's driver-side read). A fifth file lands AFTER
-    the first drain and must be admitted exactly once through the
-    checkpointed offset — the watchdog's continuous-tail behavior
+    """The partitioned stream reader across a query restart: the driver
+    only lists the landing dir per micro-batch — each newly-landed run
+    file becomes one InputPartition decoded ON EXECUTORS as Arrow batches,
+    so a burst of landed files fans out across a fleet. A fifth file
+    lands AFTER the first drain and must be admitted exactly once through
+    the checkpointed offset — the watchdog's continuous-tail behavior
     (DAQ_self-triggering.md:306-311) driven as two ``availableNow``
-    drains over ONE checkpoint (optimization round 12: replaces a 1 s
-    processing-time trigger + 0.5 s sink-polling loop that paid several
-    wall-seconds of pure wait; the restart additionally exercises offset
-    replay across a query restart, the sharper exactly-once probe), end
-    state hash-pinned."""
+    drains over ONE checkpoint, which also exercises offset replay across
+    a restart; end state hash-pinned."""
     ensure_deterministic(spark)
     base = _scratch("pyds_part_stream")
     landing = os.path.join(base, "landing")
@@ -208,12 +186,9 @@ def stream_python_datasource_partitioned(spark: SparkSession,
     from project_etl_spark.operators.streaming_live import _golden_frames
 
     def _drain():
-        q = (spark.readStream.format("etl_runfiles").option("path", landing)
-             .option("streaming", "partitioned").load()
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        _drain_or_fail(q)
+        frames = (spark.readStream.format("etl_runfiles")
+                  .option("path", landing).load())
+        drain(parquet_sink(frames, out, ckpt).start())
 
     with _few_shuffle_partitions(spark):
         _drain()                                  # admits the 4 initial files
@@ -284,11 +259,10 @@ def sink_stream_python_datasource(spark: SparkSession,
     _golden_run_files(landing)
     register_datasource(spark)
     with _few_shuffle_partitions(spark):
-        q = (spark.readStream.format("etl_runfiles")
-             .option("path", landing).load()
-             .writeStream.format("etl_runfiles").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        _drain_or_fail(q)
+        drain(spark.readStream.format("etl_runfiles")
+              .option("path", landing).load()
+              .writeStream.format("etl_runfiles").option("path", out)
+              .option("checkpointLocation", ckpt).outputMode("append")
+              .trigger(availableNow=True).start())
     back = spark.read.format("etl_runfiles").option("path", out).load()
     return _census(back)

@@ -22,6 +22,8 @@ from project_etl_spark.io import scratch_dir as _scratch
 from project_etl_spark.io import table
 from project_etl_spark.registry import register
 from project_etl_spark.session import ensure_deterministic
+from project_etl_spark.streaming import drain, parquet_sink
+from project_etl_spark.streaming.ingest import HIT_SCHEMA
 
 _T0 = dt.datetime(2025, 1, 1, 12, 0, 0)
 
@@ -200,10 +202,7 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     _golden_run_files(landing)
     with _few_shuffle_partitions(spark):
         frames = streaming_frames(spark, landing, max_files_per_trigger=1)
-        q = (frames.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(frames, out, ckpt).start())
     return spark.read.parquet(out).groupBy("run", "rb", "kind").agg(
         F.count(F.lit(1)).alias("n_frames"))
 
@@ -234,12 +233,9 @@ def sink_stream_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     rows = [(1, rb, 0, i, i % 16, i % 16, 100, 50,
              _T0 + dt.timedelta(seconds=i)) for rb in (0, 1) for i in range(16)]
-    _write_fixture(spark, rows,
-                   "run int, rb int, etroc int, event_id long, row int,"
-                   " col int, toa int, tot int, ts timestamp", hits_dir)
+    _write_fixture(spark, rows, HIT_SCHEMA, hits_dir)
     with _few_shuffle_partitions(spark):
-        q = start_ledger_sink(spark, hits_dir, ledger, ckpt)
-        q.awaitTermination(120)
+        drain(start_ledger_sink(spark, hits_dir, ledger, ckpt))
     return spark.read.parquet(ledger)
 
 
@@ -275,12 +271,10 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = ([(1, 0, 0, i, 1, 1, 100, 50, _T0 + dt.timedelta(seconds=i))
              for i in range(20)]
             + [(1, 0, 0, 999, 1, 1, 100, 50, _T0 + dt.timedelta(minutes=30))])
-    _write_fixture(spark, rows,
-                   "run int, rb int, etroc int, event_id long, row int,"
-                   " col int, toa int, tot int, ts timestamp", hits_dir)
+    _write_fixture(spark, rows, HIT_SCHEMA, hits_dir)
     with _few_shuffle_partitions(spark):
-        q = start_ingest(spark, hits_dir, out, ckpt, watermark="2 minutes")
-        q.awaitTermination(120)
+        drain(start_ingest(spark, hits_dir, out, ckpt,
+                           watermark="2 minutes"))
     return spark.read.parquet(out)
 
 
@@ -316,14 +310,12 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((1, 0, 0, i, 1, 1, 100, 50, ts))
         rows.append((1, 0, 0, i, 1, 1, 100, 50,
                      ts + dt.timedelta(milliseconds=5)))  # double trigger
-    _write_fixture(spark, rows,
-                   "run int, rb int, etroc int, event_id long, row int,"
-                   " col int, toa int, tot int, ts timestamp", hits_dir)
+    _write_fixture(spark, rows, HIT_SCHEMA, hits_dir)
     # dropDuplicates emits each survivor eagerly in its data batch; the
     # no-data batch only evicts expired state (_eager_emission).
     with _few_shuffle_partitions(spark), _eager_emission(spark):
-        q = start_dedup_stream(spark, hits_dir, out, ckpt, watermark="1 minutes")
-        q.awaitTermination(120)
+        drain(start_dedup_stream(spark, hits_dir, out, ckpt,
+                                 watermark="1 minutes"))
     return spark.read.parquet(out).select(
         "run", "rb", "etroc", "event_id", "row", "col", "toa", "tot")
 
@@ -373,8 +365,7 @@ def stream_stateful_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "etroc int, seq long, is_reset boolean, ts timestamp",
                    sig_dir)
     with _few_shuffle_partitions(spark):
-        q = start_event_counter(spark, sig_dir, out, ckpt)
-        q.awaitTermination(120)
+        drain(start_event_counter(spark, sig_dir, out, ckpt))
     return spark.read.parquet(out)
 
 
@@ -409,14 +400,7 @@ def stream_trigger_micro_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     _golden_run_files(landing)  # 2 runs x 2 rbs = 4 files
     with _few_shuffle_partitions(spark):
         frames = streaming_frames(spark, landing, max_files_per_trigger=1)
-        q = (frames.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError(
-                "stream_trigger_micro_batch: availableNow drain did not "
-                "terminate within 120s — streaming trigger regression?")
+        q = drain(parquet_sink(frames, out, ckpt).start())
         # one file admitted per trigger => each landed file is its own
         # non-empty micro-batch; counting those (not total rows) verifies
         # the >= 4-batch drain the docstring claims.
@@ -502,10 +486,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (h["ts"] < c["cts"] + F.expr("INTERVAL 10 SECONDS")),
             "inner").select(h["run"], h["rb"], "event_id", "tot",
                             "calib_id", "scale", "ts")
-        q = (joined.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(joined, out, ckpt).start())
     return (spark.read.parquet(out)
             .groupBy("rb", "calib_id")
             .agg(F.count(F.lit(1)).alias("n_hits"),
@@ -565,10 +546,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (h["ts"] >= c["cts"])
             & (h["ts"] < c["cts"] + F.expr("INTERVAL 10 SECONDS")),
             "left_outer").select(h["run"], h["rb"], "event_id", "calib_id")
-        q = (joined.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(joined, out, ckpt).start())
     back = spark.read.parquet(out).where(F.col("rb") == 0)
     matched = back.where(F.col("calib_id").isNotNull()).count()
     orphans = back.where(F.col("calib_id").isNull()).count()
@@ -832,10 +810,8 @@ def stream_file_sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame
     os.makedirs(landing)
     _golden_run_files(landing)
     with _few_shuffle_partitions(spark):
-        q = start_watchdog(spark, landing, out, ckpt)
-        q.awaitTermination(120)
-        q2 = start_watchdog(spark, landing, out, ckpt)  # no-op replay
-        q2.awaitTermination(120)
+        drain(start_watchdog(spark, landing, out, ckpt))
+        drain(start_watchdog(spark, landing, out, ckpt))  # no-op replay
     return spark.read.parquet(out).groupBy("run").agg(
         F.count(F.lit(1)).alias("n_frames"))
 
@@ -956,10 +932,7 @@ def stream_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("w.start").alias("session_start"),
                        F.col("w.end").alias("session_end"),
                        "n_events"))
-        q = (agg.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(agg, out, ckpt).start())
     return spark.read.parquet(out)
 
 
@@ -1005,10 +978,7 @@ def stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.col("w.start").alias("window_start"),
                        F.col("w.end").alias("window_end"),
                        "n_events"))
-        q = (agg.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(agg, out, ckpt).start())
     return (spark.read.parquet(out)
             .where(F.col("user_id") == 1))
 
@@ -1104,8 +1074,7 @@ def stream_stateful_counter_rocksdb(spark: SparkSession,
     with _few_shuffle_partitions(spark), \
          _conf_override(spark, "spark.sql.streaming.stateStore.providerClass",
                         _ROCKSDB_PROVIDER):
-        q = start_event_counter(spark, sig_dir, out, ckpt)
-        q.awaitTermination(120)
+        drain(start_event_counter(spark, sig_dir, out, ckpt))
     return spark.read.parquet(out).select("etroc", "seq", "event_cnt")
 
 
@@ -1146,15 +1115,14 @@ def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                    [(e, s, _T0) for e in (0, 1) for s in range(1, 11)],
                    "etroc int, seq long, ts timestamp", src)
     with _few_shuffle_partitions(spark):
-        q = (spark.readStream.schema("etroc int, seq long, ts timestamp")
-             .parquet(src)
-             .groupBy("etroc")
-             .agg(F.count(F.lit(1)).alias("n_signals"),
-                  F.sum("seq").alias("seq_sum"))
-             .writeStream.format("noop").outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(spark.readStream.schema("etroc int, seq long, ts timestamp")
+              .parquet(src)
+              .groupBy("etroc")
+              .agg(F.count(F.lit(1)).alias("n_signals"),
+                   F.sum("seq").alias("seq_sum"))
+              .writeStream.format("noop").outputMode("complete")
+              .option("checkpointLocation", ckpt)
+              .trigger(availableNow=True).start())
     state = spark.read.format("statestore").load(ckpt)
     # the store holds the AGGREGATION BUFFER, so fields carry the buffer
     # names (count, sum), not the output aliases — part of what the reader
@@ -1194,13 +1162,12 @@ def scan_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
                    [(e, s, _T0) for e in (0, 1) for s in range(1, 11)],
                    "etroc int, seq long, ts timestamp", src)
     with _few_shuffle_partitions(spark):
-        q = (spark.readStream.schema("etroc int, seq long, ts timestamp")
-             .parquet(src)
-             .groupBy("etroc").agg(F.count(F.lit(1)).alias("n_signals"))
-             .writeStream.format("noop").outputMode("complete")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(spark.readStream.schema("etroc int, seq long, ts timestamp")
+              .parquet(src)
+              .groupBy("etroc").agg(F.count(F.lit(1)).alias("n_signals"))
+              .writeStream.format("noop").outputMode("complete")
+              .option("checkpointLocation", ckpt)
+              .trigger(availableNow=True).start())
     meta = spark.read.format("state-metadata").load(ckpt)
     return meta.select(
         F.col("operatorId").cast("long").alias("operator_id"),
@@ -1261,9 +1228,8 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = src.groupBy("etroc").agg(
             F.count(F.lit(1)).alias("n_signals"),
             F.sum("seq").alias("seq_sum"))
-        q = (agg.writeStream.format("memory").queryName("etl_update_tbl")
-             .outputMode("update").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(agg.writeStream.format("memory").queryName("etl_update_tbl")
+              .outputMode("update").trigger(availableNow=True).start())
     return spark.table("etl_update_tbl").select("etroc", "n_signals",
                                                 "seq_sum")
 
@@ -1292,9 +1258,8 @@ def stream_complete_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = src.groupBy("etroc").agg(
             F.count(F.lit(1)).alias("n_signals"),
             F.sum("seq").alias("seq_sum"))
-        q = (agg.writeStream.format("memory").queryName("etl_complete_tbl")
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(agg.writeStream.format("memory").queryName("etl_complete_tbl")
+              .outputMode("complete").trigger(availableNow=True).start())
     return spark.table("etl_complete_tbl").select("etroc", "n_signals",
                                                   "seq_sum")
 
@@ -1360,10 +1325,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.col("n_events").cast("long").alias("n_events"),
                           F.col("n_subwindows").cast("long")
                           .alias("n_subwindows")))
-        q = (rolled.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(rolled, out, ckpt).start())
     return spark.read.parquet(out)
 
 
@@ -1424,10 +1386,7 @@ def stream_stream_join_full_outer(spark: SparkSession,
             "full_outer")
             .select(F.coalesce(h["rb"], c["rb"]).alias("rb"),
                     "event_id", "calib_id"))
-        q = (joined.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(joined, out, ckpt).start())
     back = spark.read.parquet(out).where(F.col("rb") == 0)
     return (back.groupBy("calib_id")
             .agg(F.count("event_id").cast("long").alias("n_hits"),
@@ -1489,10 +1448,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim = F.broadcast(spark.read.parquet(dim_dir))
         joined = (h.join(dim, "etroc")
                   .select("run", "rb", "event_id", "module", "gain", "ts"))
-        q = (joined.writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt).outputMode("append")
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(parquet_sink(joined, out, ckpt).start())
     return (spark.read.parquet(out)
             .groupBy("module")
             .agg(F.count(F.lit(1)).cast("long").alias("n_hits"),
@@ -1668,13 +1624,9 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _few_shuffle_partitions(spark):
         src = (spark.readStream.schema(schema)
                .option("maxFilesPerTrigger", 1).json(landing))
-        q = (src.writeStream.foreachBatch(_merge)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(120):
-            q.stop()
-            raise TimeoutError("stream_merge_upsert: CDC drain did not "
-                               "terminate within 120s")
+        drain(src.writeStream.foreachBatch(_merge)
+              .option("checkpointLocation", ckpt)
+              .trigger(availableNow=True).start())
     if gen["n"] < 3:
         raise AssertionError(
             f"stream_merge_upsert: expected >= 3 merge generations (one "
@@ -1756,9 +1708,8 @@ def stream_hdr_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = (src.select(bucket.alias("bucket"))
                .groupBy("bucket").agg(F.count(F.lit(1)).cast("long")
                                       .alias("n")))
-        q = (agg.writeStream.format("memory").queryName("etl_hdr_tbl")
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        drain(agg.writeStream.format("memory").queryName("etl_hdr_tbl")
+              .outputMode("complete").trigger(availableNow=True).start())
     est = F.expr("CAST(FLOOR(EXP((bucket + 5e-1) / 4e0 * LN(2e0)) * 1e3"
                  " + 5e-1) AS BIGINT)")
     return (spark.table("etl_hdr_tbl")
@@ -1842,8 +1793,7 @@ def stream_session_event_timeout(spark: SparkSession,
         _shutil.copyfile(src, dst)
         os.utime(dst, (1_700_000_000 + 100 * i,) * 2)
     with _few_shuffle_partitions(spark):
-        q = start_session_closer(spark, ev_dir, os.path.join(base, "out"),
-                                 os.path.join(base, "ckpt"))
-        q.awaitTermination(120)
+        drain(start_session_closer(spark, ev_dir, os.path.join(base, "out"),
+                                   os.path.join(base, "ckpt")))
     return (spark.read.parquet(os.path.join(base, "out"))
             .select("user_id", "n_events", "first_us", "last_us"))

@@ -25,13 +25,12 @@ Scale design:
   whole files at planning time — the Python-source analog of partition
   pruning (zero bytes read for pruned runs). All other filters stay with
   Spark.
-- **Streaming**: ``SimpleDataSourceStreamReader`` whose offset is an index
-  into the sorted file listing — the watchdog's "which files have I
-  consumed" ledger re-expressed as a replayable offset, giving exactly-once
-  file admission through the checkpoint. (The simple reader reads on the
-  driver; it is the demo-scale path — the batch reader above carries the
-  partitioned scale story, and Spark's own file source covers scaled
-  streaming ingest in ``operators/streaming_live.py``.)
+- **Streaming**: a ``DataSourceStreamReader`` whose offset is the ledger
+  of admitted landing-dir files — the watchdog's "which files have I
+  consumed" record re-expressed as a replayable offset, giving
+  exactly-once file admission through the checkpoint. The driver only
+  lists the directory; each newly-landed file is one InputPartition
+  decoded on an executor, exactly like the batch reader.
 """
 
 from __future__ import annotations
@@ -56,7 +55,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -104,6 +102,15 @@ def _consumed_set(offset: dict) -> set:
     return set(offset["files"])
 
 
+def _required_path(options: dict) -> str:
+    path = options.get("path")
+    if not path:
+        raise ValueError("etl_runfiles: a directory is required — "
+                         ".option('path', <dir>), .load(<dir>) or "
+                         ".save(<dir>)")
+    return path
+
+
 def _file_run_rb(path: str) -> tuple[int, int]:
     m = FILENAME_RE.search(path)
     return (int(m.group(1)), int(m.group(2))) if m else (-1, -1)
@@ -135,8 +142,7 @@ class _RunFilePartition(InputPartition):
 
 def _arrow_batches(path: str, drop_filler: bool):
     """One run file -> Arrow RecordBatches via the shared numpy kernel
-    (executor-side; used by the batch reader AND the partitioned stream
-    reader)."""
+    (executor-side; used by the batch and the stream reader)."""
     import pyarrow as pa
     with open(path, "rb") as fh:
         blob = fh.read()
@@ -148,10 +154,7 @@ class RunFilesReader(DataSourceReader):
     """Partition-per-file Arrow batch reader."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("etl_runfiles: .option('path', <landing dir>) "
-                             "or .load(<landing dir>) is required")
+        self.path = _required_path(options)
         self.drop_filler = str(options.get("dropfiller", "true")).lower() != "false"
         self.pruners: list[tuple[str, str, object]] = []
 
@@ -187,63 +190,16 @@ class RunFilesPushdownReader(RunFilesReader):
                 yield f  # not ours — Spark keeps it
 
 
-class RunFilesStreamReader(SimpleDataSourceStreamReader):
-    """Offset = sorted ledger of landing-dir basenames already admitted
-    (see ``_consumed_set`` for why a ledger, not a listing index)."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("etl_runfiles: .option('path', ...) required")
-        self.drop_filler = str(options.get("dropfiller", "true")).lower() != "false"
-
-    def initialOffset(self) -> dict:
-        return {"files": []}
-
-    def _rows_for(self, files: list[str]) -> Iterator[tuple]:
-        # Materialized list, not a generator: Spark's prefetching offset
-        # cache copy.copy()-ies the returned iterator for replay, which a
-        # generator cannot survive.
-        rows = []
-        for path in files:
-            with open(path, "rb") as fh:
-                pdf = blob_to_frames_pdf(path, fh.read(),
-                                         drop_filler=self.drop_filler)
-            # tuples in DECODED_FRAME_SCHEMA field order, pd.NA -> None
-            # (object-cast first: pd.NA refuses truthiness, so compare by
-            # identity against the NA singleton)
-            import pandas as pd
-            rows.extend(
-                tuple(None if v is pd.NA else v for v in row)
-                for row in pdf.itertuples(index=False, name=None))
-        return iter(rows)
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        seen = _consumed_set(start)
-        files = _list_run_files(self.path)
-        new = [p for p in files if os.path.basename(p) not in seen]
-        end = {"files": sorted(seen | {os.path.basename(p) for p in new})}
-        return self._rows_for(new), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        batch = _consumed_set(end) - _consumed_set(start)
-        files = [p for p in _list_run_files(self.path)
-                 if os.path.basename(p) in batch]
-        return self._rows_for(files)
-
-
 class RunFilesPartitionedStreamReader(DataSourceStreamReader):
-    """The SCALE streaming path: offsets are the same consumed-file ledger
-    as the simple reader's, but micro-batch work is planned as one
-    InputPartition per newly-landed file and DECODED ON EXECUTORS as Arrow
-    batches — on a real cluster a burst of landed run files fans out
-    across the fleet, while the driver only lists the directory. Enabled
-    with ``.option("streaming", "partitioned")``."""
+    """Offset = sorted ledger of landing-dir basenames already admitted
+    (see ``_consumed_set`` for why a ledger, not a listing index).
+    Micro-batch work is planned as one InputPartition per newly-landed
+    file and DECODED ON EXECUTORS as Arrow batches — on a real cluster a
+    burst of landed run files fans out across the fleet, while the driver
+    only lists the directory."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("etl_runfiles: .option('path', ...) required")
+        self.path = _required_path(options)
         self.drop_filler = str(options.get("dropfiller", "true")).lower() != "false"
 
     def initialOffset(self) -> dict:
@@ -269,64 +225,71 @@ class RunFilesPartitionedStreamReader(DataSourceStreamReader):
 @dataclass
 class _RunFilesCommit(WriterCommitMessage):
     """Per-task commit message: which temp fragments this task produced,
-    keyed by (run, rb, partition_id) so the driver can assemble final
+    keyed by (run, rb, fragment suffix) so the driver can assemble final
     files in a deterministic fragment order."""
-    fragments: list = field(default_factory=list)  # (run, rb, pid, tmp path)
+    fragments: list = field(default_factory=list)  # (run, rb, suffix, tmp)
 
 
-class RunFilesWriter(DataSourceWriter):
-    """Batch WRITE side of the custom format — the reference's merge step
-    (decoded hits back to per-(run, rb) binary files,
-    DAQ_self-triggering.md:288-301) as a first-class ``df.write.format``
-    target, with the full two-phase commit protocol:
+def _concat(final: str, fragments: list[str], mode: str) -> None:
+    with open(final, mode) as out:
+        for tmp in fragments:
+            with open(tmp, "rb") as fh:
+                out.write(fh.read())
 
-    - ``write`` (executors): each task groups its rows by (run, rb),
-      encodes them with the shared 40-bit packer (``decode.encode_frames``
-      — the same single source of truth the golden-fixture generator
-      uses) and writes TEMP fragments; nothing lands under a final name.
-    - ``commit`` (driver): fragments are concatenated per (run, rb) in
-      (partition_id) order into ``output_run_{run}_rb{rb}.dat`` — frames
-      are a self-delimiting stream, so concatenation IS merge — then
-      temps are removed. A failed job never leaves partial final files
-      (``abort`` deletes fragments), which is the sink atomicity contract
-      Spark's own file sinks get from their commit protocol.
 
-    Scale note: repartition the input by (run, rb) so each final file is
-    one fragment and the driver-side commit is a pure rename-cost loop;
-    an unpartitioned write still commits correctly (fragment concat), it
-    just moves the merge cost to the driver — same trade the reference's
-    single-node merge step makes."""
+class _FragmentSink:
+    """The fragment bookkeeping both writers share. Executors group their
+    rows by (run, rb), pack them with the shared 40-bit packer
+    (``decode.encode_frames`` — the same single source of truth the
+    golden-fixture generator uses) and write TEMP fragments under
+    ``<path>/_etl_tmp``; nothing lands under a final name. The driver
+    groups the fragments per final file and removes them afterwards."""
 
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("etl_runfiles: .option('path', ...) or "
-                             ".save(<dir>) is required")
+        self.path = _required_path(options)
 
     def write(self, iterator) -> _RunFilesCommit:
         from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        return _encode_groups(iterator, self.path, f"part{pid:06d}")
 
-    def commit(self, messages) -> None:
-        by_file: dict[tuple, list] = {}
-        for m in messages:
-            for run, rb, pid, tmp in m.fragments:
-                by_file.setdefault((run, rb), []).append((pid, tmp))
-        for (run, rb), frags in sorted(by_file.items()):
-            final = os.path.join(self.path, f"output_run_{run}_rb{rb}.dat")
-            with open(final, "wb") as out:
-                for _, tmp in sorted(frags):
-                    with open(tmp, "rb") as fh:
-                        out.write(fh.read())
-        self._cleanup(messages)
+        from project_etl_spark.decode import encode_frames
+        ctx = TaskContext.get()
+        # zero-padded so fragment order is partition order; the attempt id
+        # keeps two attempts of one task (retry, speculation) off one file
+        suffix = f"part{ctx.partitionId():06d}_a{ctx.taskAttemptId()}"
+        tmpdir = os.path.join(self.path, "_etl_tmp")
+        os.makedirs(tmpdir, exist_ok=True)
+        groups: dict[tuple, list[dict]] = {}
+        for row in iterator:
+            frame = {"kind": row["kind"], "elink": int(row["elink"] or 0)}
+            if row["kind"] == "data":
+                frame.update(row=int(row["row"]), col=int(row["col"]),
+                             toa=int(row["toa"]), tot=int(row["tot"]))
+            elif row["kind"] == "header":
+                frame["event_id"] = int(row["event_id"])
+            groups.setdefault((int(row["run"]), int(row["rb"])),
+                              []).append(frame)
+        msg = _RunFilesCommit()
+        for (run, rb), frames in sorted(groups.items()):
+            tmp = os.path.join(tmpdir, f"run{run}_rb{rb}_{suffix}.tmpfrag")
+            with open(tmp, "wb") as fh:
+                fh.write(encode_frames(frames))
+            msg.fragments.append((run, rb, suffix, tmp))
+        return msg
 
-    def abort(self, messages) -> None:
-        self._cleanup(messages)
+    def _final_files(self, messages) -> dict[str, list[str]]:
+        """Final file path -> its temp fragments in partition order, files
+        in (run, rb) order. Failed tasks send no message (None)."""
+        by_key: dict[tuple, list] = {}
+        for m in filter(None, messages):
+            for run, rb, suffix, tmp in m.fragments:
+                by_key.setdefault((run, rb), []).append((suffix, tmp))
+        return {os.path.join(self.path, f"output_run_{run}_rb{rb}.dat"):
+                [tmp for _, tmp in sorted(frags)]
+                for (run, rb), frags in sorted(by_key.items())}
 
     def _cleanup(self, messages) -> None:
-        for m in messages:
-            for _, _, _, tmp in m.fragments:
+        for m in filter(None, messages):
+            for *_, tmp in m.fragments:
                 try:
                     os.remove(tmp)
                 except OSError:
@@ -337,33 +300,35 @@ class RunFilesWriter(DataSourceWriter):
             pass
 
 
+class RunFilesWriter(_FragmentSink, DataSourceWriter):
+    """Batch WRITE side of the custom format — the reference's merge step
+    (decoded hits back to per-(run, rb) binary files,
+    DAQ_self-triggering.md:288-301) as a first-class ``df.write.format``
+    target, with the full two-phase commit protocol: executors write temp
+    fragments (``_FragmentSink.write``); ``commit`` (driver) concatenates
+    them per (run, rb) in partition order into
+    ``output_run_{run}_rb{rb}.dat`` — frames are a self-delimiting stream,
+    so concatenation IS merge — then removes the temps. A failed job never
+    leaves partial final files (``abort`` deletes fragments), which is the
+    sink atomicity contract Spark's own file sinks get from their commit
+    protocol.
 
-def _encode_groups(iterator, path: str, frag_suffix: str):
-    """Shared executor-side fragment encoder for both writers: group the
-    task's rows by (run, rb), pack them with ``decode.encode_frames`` and
-    write temp fragments under ``<path>/_etl_tmp``."""
-    from project_etl_spark.decode import encode_frames
-    tmpdir = os.path.join(path, "_etl_tmp")
-    os.makedirs(tmpdir, exist_ok=True)
-    groups: dict[tuple, list[dict]] = {}
-    for row in iterator:
-        frame = {"kind": row["kind"], "elink": int(row["elink"] or 0)}
-        if row["kind"] == "data":
-            frame.update(row=int(row["row"]), col=int(row["col"]),
-                         toa=int(row["toa"]), tot=int(row["tot"]))
-        elif row["kind"] == "header":
-            frame["event_id"] = int(row["event_id"])
-        groups.setdefault((int(row["run"]), int(row["rb"])), []).append(frame)
-    msg = _RunFilesCommit()
-    for (run, rb), frames in sorted(groups.items()):
-        tmp = os.path.join(tmpdir, f"run{run}_rb{rb}_{frag_suffix}.tmpfrag")
-        with open(tmp, "wb") as fh:
-            fh.write(encode_frames(frames))
-        msg.fragments.append((run, rb, frag_suffix, tmp))
-    return msg
+    Scale note: repartition the input by (run, rb) so each final file is
+    one fragment and the driver-side commit is a pure rename-cost loop;
+    an unpartitioned write still commits correctly (fragment concat), it
+    just moves the merge cost to the driver — same trade the reference's
+    single-node merge step makes."""
+
+    def commit(self, messages) -> None:
+        for final, fragments in self._final_files(messages).items():
+            _concat(final, fragments, "wb")
+        self._cleanup(messages)
+
+    def abort(self, messages) -> None:
+        self._cleanup(messages)
 
 
-class RunFilesStreamWriter(DataSourceStreamWriter):
+class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
     """STREAMING sink for the custom format with genuinely exactly-once
     per-(run, rb) file APPEND — the reference's acquisition loop (append
     packed words to the run file, note progress in the daq_log ledger,
@@ -388,19 +353,6 @@ class RunFilesStreamWriter(DataSourceStreamWriter):
     ledger is the single source of truth, exactly the role the
     reference's ``daq_log.txt`` plays for its merge step."""
 
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("etl_runfiles: .option('path', ...) required")
-
-    # -- executor side ----------------------------------------------------
-    def write(self, iterator) -> "_RunFilesCommit":
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        suffix = f"part{ctx.partitionId()}_a{ctx.taskAttemptId()}"
-        return _encode_groups(iterator, self.path, suffix)
-
-    # -- driver side ------------------------------------------------------
     def _ledger_path(self) -> str:
         return os.path.join(self.path, "_stream_commits.jsonl")
 
@@ -433,15 +385,7 @@ class RunFilesStreamWriter(DataSourceStreamWriter):
                for e in entries):
             self._cleanup(messages)          # acknowledged replay: no-op
             return
-        by_file: dict[tuple, list] = {}
-        for m in messages:
-            if m is None:
-                continue
-            for run, rb, suffix, tmp in m.fragments:
-                by_file.setdefault((run, rb), []).append((suffix, tmp))
-        finals = {key: os.path.join(
-            self.path, f"output_run_{key[0]}_rb{key[1]}.dat")
-            for key in by_file}
+        finals = self._final_files(messages)
         intents = [e for e in entries
                    if e["batch"] == batchId and e["phase"] == "intent"]
         if intents:                          # crashed mid-append: rewind
@@ -453,17 +397,12 @@ class RunFilesStreamWriter(DataSourceStreamWriter):
         self._crash_hook("before_intent")
         pre = {os.path.basename(f):
                (os.path.getsize(f) if os.path.exists(f) else 0)
-               for f in finals.values()}
+               for f in finals}
         self._ledger_append({"batch": batchId, "phase": "intent",
                              "pre": pre})
-        appended = 0
-        for key in sorted(by_file):
-            with open(finals[key], "ab") as out:
-                for _, tmp in sorted(by_file[key]):
-                    with open(tmp, "rb") as fh:
-                        out.write(fh.read())
-            appended += 1
-            if appended == 1:
+        for i, (final, fragments) in enumerate(finals.items()):
+            _concat(final, fragments, "ab")
+            if i == 0:
                 self._crash_hook("mid_append")
         self._crash_hook("before_done")
         self._ledger_append({"batch": batchId, "phase": "done"})
@@ -473,24 +412,10 @@ class RunFilesStreamWriter(DataSourceStreamWriter):
     def abort(self, messages, batchId: int) -> None:
         self._cleanup(messages)
 
-    def _cleanup(self, messages) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for _, _, _, tmp in m.fragments:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-        try:
-            os.rmdir(os.path.join(self.path, "_etl_tmp"))
-        except OSError:
-            pass
-
 
 class RunFilesDataSource(DataSource):
-    """``format("etl_runfiles")`` — batch + streaming typed frame source,
-    and batch frame SINK (``RunFilesWriter``)."""
+    """``format("etl_runfiles")`` — batch + streaming typed frame source
+    and frame sink."""
 
     @classmethod
     def name(cls) -> str:
@@ -505,14 +430,7 @@ class RunFilesDataSource(DataSource):
         return RunFilesReader(self.options)
 
     def streamReader(self, schema: StructType) -> RunFilesPartitionedStreamReader:
-        if str(self.options.get("streaming", "simple")).lower() == "partitioned":
-            return RunFilesPartitionedStreamReader(self.options)
-        # raising PySparkNotImplementedError makes Spark fall back to the
-        # simpleStreamReader below (the documented selection contract)
-        return super().streamReader(schema)
-
-    def simpleStreamReader(self, schema: StructType) -> RunFilesStreamReader:
-        return RunFilesStreamReader(self.options)
+        return RunFilesPartitionedStreamReader(self.options)
 
     def writer(self, schema: StructType, overwrite: bool) -> RunFilesWriter:
         return RunFilesWriter(self.options)

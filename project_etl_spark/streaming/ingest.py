@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from project_etl_spark.streaming import parquet_sink
+
 HIT_SCHEMA = ("run int, rb int, etroc int, event_id long, row int, col int,"
               " toa int, tot int, ts timestamp")
 
@@ -87,12 +89,7 @@ def start_ingest(spark: SparkSession, hits_dir: str, out_dir: str,
     write-stats-at-run-stop (DAQ_self-triggering.md:235-237)."""
     stats = windowed_run_stats(
         streaming_hits(spark, hits_dir, max_files_per_trigger), watermark)
-    return (stats.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return parquet_sink(stats, out_dir, checkpoint_dir).start()
 
 
 def start_ledger_sink(spark: SparkSession, hits_dir: str, ledger_dir: str,

@@ -28,6 +28,8 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
+from project_etl_spark.streaming import parquet_sink
+
 # Input rows: one per trigger or reset command.
 SIGNAL_SCHEMA = ("etroc int, seq long, is_reset boolean, ts timestamp")
 
@@ -71,12 +73,7 @@ def start_event_counter(spark: SparkSession, signals_dir: str, out_dir: str,
                                 outputMode="append",
                                 timeoutConf=GroupStateTimeout.NoTimeout)
     )
-    return (counted.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return parquet_sink(counted, out_dir, checkpoint_dir).start()
 
 
 def event_counter_batch(signals: DataFrame) -> DataFrame:
@@ -162,12 +159,7 @@ def start_event_counter_tws(spark: SparkSession, signals_dir: str,
                    outputStructType=OUTPUT_SCHEMA,
                    outputMode="Append",
                    timeMode="None"))
-    return (counted.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return parquet_sink(counted, out_dir, checkpoint_dir).start()
 
 
 # ---------------------------------------------------------------------------
@@ -261,9 +253,4 @@ def start_session_closer(spark: SparkSession, events_dir: str, out_dir: str,
                                       outputMode="append",
                                       timeoutConf=GroupStateTimeout
                                       .EventTimeTimeout))
-    return (closed.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return parquet_sink(closed, out_dir, checkpoint_dir).start()

@@ -18,41 +18,31 @@ move-to-archive protocol of the reference, for free. The readiness join
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from project_etl_spark.decode import DECODED_FRAME_SCHEMA, blob_to_frames_pdf
+from project_etl_spark.decode import decode_binary_frames
+from project_etl_spark.streaming import parquet_sink
+from project_etl_spark.streaming.ingest import streaming_hits
 
 
 def streaming_frames(spark: SparkSession, landing_dir: str,
                      drop_filler: bool = True,
                      max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming decode: binaryFile stream source -> mapInPandas kernel.
+    """Streaming decode: binaryFile stream source -> the shared decode step.
 
     ``maxFilesPerTrigger`` is the admission-control knob — the analog of the
     reference's 128-word block reads (DAQ_self-triggering.md:199-204):
     bounds per-micro-batch work so state and memory stay flat at scale.
     """
-    from project_etl_spark.session import _ship_package
-    _ship_package(spark)  # mapInPandas closure references this package
     reader = (spark.readStream.format("binaryFile")
               .schema("path string, modificationTime timestamp,"
                       " length long, content binary")
               .option("pathGlobFilter", "*.dat"))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    binary = reader.load(landing_dir).select("path", "content")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                yield blob_to_frames_pdf(path, blob, drop_filler)
-
-    return binary.mapInPandas(run, DECODED_FRAME_SCHEMA)
+    return decode_binary_frames(reader.load(landing_dir), drop_filler)
 
 
 def start_watchdog(spark: SparkSession, landing_dir: str, out_dir: str,
@@ -64,16 +54,9 @@ def start_watchdog(spark: SparkSession, landing_dir: str, out_dir: str,
     ``availableNow`` drains the backlog then stops (batch-over-stream);
     pass False for a continuously-running watchdog.
     """
-    frames = streaming_frames(spark, landing_dir)
-    writer = (frames.writeStream
-              .format("parquet")
-              .option("path", out_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .partitionBy("run")
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
+    writer = parquet_sink(streaming_frames(spark, landing_dir), out_dir,
+                          checkpoint_dir).partitionBy("run")
+    if not available_now:
         writer = writer.trigger(processingTime="500 milliseconds")
     return writer.start()
 
@@ -97,16 +80,8 @@ def start_dedup_stream(spark: SparkSession, landing_dir: str, out_dir: str,
     """Online double-trigger removal (Documentation-Self-Triggering.html:239-243):
     ``dropDuplicatesWithinWatermark`` on the hit identity — state is bounded
     by the watermark horizon, so it runs forever at constant memory."""
-    hits = (spark.readStream.schema(
-                "run int, rb int, etroc int, event_id long, row int, col int,"
-                " toa int, tot int, ts timestamp")
-            .parquet(landing_dir))
-    deduped = (hits.withWatermark(ts_col, watermark)
+    deduped = (streaming_hits(spark, landing_dir)
+               .withWatermark(ts_col, watermark)
                .dropDuplicatesWithinWatermark(["run", "rb", "etroc", "event_id",
                                                "row", "col"]))
-    return (deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return parquet_sink(deduped, out_dir, checkpoint_dir).start()

@@ -11,11 +11,13 @@ from pyspark.sql.datasource import EqualTo, GreaterThan, In, StringContains
 
 from project_etl_spark.decode import write_run_file
 from project_etl_spark.pyds import (
+    RunFilesDataSource,
+    RunFilesPartitionedStreamReader,
     RunFilesPushdownReader,
     RunFilesReader,
-    RunFilesStreamReader,
     _list_run_files,
 )
+from project_etl_spark.streaming import drain
 
 FRAMES = ([{"kind": "header", "elink": 0, "event_id": 7}]
           + [{"kind": "data", "elink": 1, "row": 2, "col": 3,
@@ -65,24 +67,31 @@ def test_base_reader_reads_everything(landing):
     assert sum(b.num_rows for b in batches) == 5  # filler dropped
 
 
+def _batch(r, start: dict, end: dict) -> list[tuple]:
+    """The micro-batch between two offsets as executors read it: every
+    planned partition's Arrow batches, as tuples in schema order."""
+    return [tuple(row.values())
+            for part in r.partitions(start, end)
+            for b in r.read(part) for row in b.to_pylist()]
+
+
 def test_stream_offsets_advance_and_replay(landing):
-    r = RunFilesStreamReader({"path": landing})
+    r = RunFilesPartitionedStreamReader({"path": landing})
     assert r.initialOffset() == {"files": []}
     start = r.initialOffset()
-    rows, end = r.read(start)
-    rows = list(rows)
+    end = r.latestOffset()
+    rows = _batch(r, start, end)
     assert len(end["files"]) == 6
     assert len(rows) == 6 * 5
     # replay between offsets returns the identical batch
-    replay = list(r.readBetweenOffsets(start, end))
-    assert sorted(replay) == sorted(rows)
+    assert sorted(_batch(r, start, end)) == sorted(rows)
     # no new files: empty batch, offset unchanged
-    rows2, end2 = r.read(end)
-    assert list(rows2) == [] and end2 == end
+    end2 = r.latestOffset()
+    assert _batch(r, end, end2) == [] and end2 == end
     # late-arriving file is picked up by the next poll
     write_run_file(landing, run=9, rb=0, frames=FRAMES)
-    rows3, end3 = r.read(end)
-    assert len(list(rows3)) == 5 and len(end3["files"]) == 7
+    end3 = r.latestOffset()
+    assert len(_batch(r, end, end3)) == 5 and len(end3["files"]) == 7
 
 
 def test_stream_offsets_late_file_sorting_before_admitted(landing):
@@ -91,34 +100,32 @@ def test_stream_offsets_late_file_sorting_before_admitted(landing):
     were consumed; '10' < '2' lexicographically is the trap) must be
     admitted exactly once, with no re-emission of admitted files and no
     unstable replay slices."""
-    r = RunFilesStreamReader({"path": landing})
+    r = RunFilesPartitionedStreamReader({"path": landing})
     write_run_file(landing, run=10, rb=0, frames=FRAMES)
-    rows, o1 = r.read(r.initialOffset())
-    assert len(list(rows)) == 7 * 5
+    o1 = r.latestOffset()
+    assert len(_batch(r, r.initialOffset(), o1)) == 7 * 5
     late = write_run_file(landing, run=1, rb=9, frames=FRAMES)
-    rows2, o2 = r.read(o1)
-    assert len(list(rows2)) == 5                 # ONLY the late file
+    o2 = r.latestOffset()
+    assert len(_batch(r, o1, o2)) == 5           # ONLY the late file
     assert set(o2["files"]) - set(o1["files"]) == {os.path.basename(late)}
     # checkpoint replay of the earlier batch is unaffected by the landing
-    replay = list(r.readBetweenOffsets(r.initialOffset(), o1))
-    assert len(replay) == 7 * 5
-    rows3, o3 = r.read(o2)
-    assert list(rows3) == [] and o3 == o2        # nothing re-admitted
+    assert len(_batch(r, r.initialOffset(), o1)) == 7 * 5
+    o3 = r.latestOffset()
+    assert _batch(r, o2, o3) == [] and o3 == o2  # nothing re-admitted
 
 
 def test_legacy_index_offset_fails_loudly(landing):
     """A pre-ledger {'index': n} checkpoint must raise, never be silently
     reinterpreted as an empty ledger (which would re-admit every consumed
     file and break exactly-once admission)."""
-    import pytest
-    r = RunFilesStreamReader({"path": landing})
+    r = RunFilesPartitionedStreamReader({"path": landing})
     with pytest.raises(ValueError, match="unrecognized streaming offset"):
-        r.read({"index": 3})
+        r.partitions({"index": 3}, r.latestOffset())
 
 
 def test_stream_rows_match_schema_nulls(landing):
-    r = RunFilesStreamReader({"path": landing})
-    rows = list(r.read({"files": []})[0])
+    r = RunFilesPartitionedStreamReader({"path": landing})
+    rows = _batch(r, r.initialOffset(), r.latestOffset())
     header = next(t for t in rows if t[3] == "header")
     data = next(t for t in rows if t[3] == "data")
     assert header[5] == 7 and header[6] is None  # event_id set, row NULL
@@ -126,7 +133,6 @@ def test_stream_rows_match_schema_nulls(landing):
 
 
 def test_partitioned_stream_reader_plans_per_file(landing):
-    from project_etl_spark.pyds import RunFilesPartitionedStreamReader
     r = RunFilesPartitionedStreamReader({"path": landing})
     assert r.initialOffset() == {"files": []}
     end = r.latestOffset()
@@ -145,15 +151,9 @@ def test_partitioned_stream_reader_plans_per_file(landing):
     assert os.path.basename(parts2[0].path) == "output_run_0_rb0.dat"
 
 
-def test_stream_reader_selection_by_option(landing):
-    from pyspark.errors import PySparkNotImplementedError
-    from project_etl_spark.pyds import (RunFilesDataSource,
-                                        RunFilesPartitionedStreamReader)
-    ds = RunFilesDataSource({"path": landing, "streaming": "partitioned"})
+def test_stream_reader_is_partitioned(landing):
+    ds = RunFilesDataSource({"path": landing})
     assert isinstance(ds.streamReader(None), RunFilesPartitionedStreamReader)
-    ds2 = RunFilesDataSource({"path": landing})
-    with pytest.raises(PySparkNotImplementedError):
-        ds2.streamReader(None)  # -> Spark falls back to simpleStreamReader
 
 
 def test_writer_roundtrip_is_byte_identical(spark, landing, tmp_path):
@@ -284,8 +284,7 @@ def _run_stream_batch(spark, landing, out, ckpt, fmt="etl_runfiles_crashy",
          .trigger(availableNow=True))
     for k, v in opts.items():
         q = q.option(k, v)
-    sq = q.start()
-    sq.awaitTermination(120)
+    drain(q.start())
 
 
 def _census(spark, out):

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from project_etl_spark.decode import write_run_file
+from project_etl_spark.streaming import DRAIN_TIMEOUT_S, drain
 from project_etl_spark.streaming.ingest import start_ingest, start_ledger_sink
 from project_etl_spark.streaming.stateful import (SIGNAL_SCHEMA,
                                                   event_counter_batch,
@@ -54,16 +55,14 @@ def test_watchdog_end_to_end(spark, tmp_path):
     write_run_file(str(landing), run=1, rb=0, frames=frames)
     write_run_file(str(landing), run=2, rb=0, frames=frames)
 
-    q = start_watchdog(spark, str(landing), str(out), str(ckpt))
-    q.awaitTermination(120)
+    drain(start_watchdog(spark, str(landing), str(out), str(ckpt)))
     got = spark.read.parquet(str(out))
     assert got.count() == 2 * 21  # header + 20 data, filler dropped
     assert {r["run"] for r in got.select("run").distinct().collect()} == {1, 2}
 
     # arrival of a third file: only the delta is processed
     write_run_file(str(landing), run=3, rb=0, frames=frames)
-    q2 = start_watchdog(spark, str(landing), str(out), str(ckpt))
-    q2.awaitTermination(120)
+    drain(start_watchdog(spark, str(landing), str(out), str(ckpt)))
     assert spark.read.parquet(str(out)).count() == 3 * 21
 
 
@@ -77,8 +76,7 @@ def test_await_pairs(spark, tmp_path):
     write_run_file(str(landing), run=1, rb=0, frames=frames)
     write_run_file(str(landing), run=1, rb=1, frames=frames)
     write_run_file(str(landing), run=2, rb=0, frames=frames)  # rb1 missing
-    q = start_watchdog(spark, str(landing), str(out), str(ckpt))
-    q.awaitTermination(120)
+    drain(start_watchdog(spark, str(landing), str(out), str(ckpt)))
     ready = await_pairs(spark.read.parquet(str(out)), required_rbs=(0, 1))
     assert [r["run"] for r in ready.collect()] == [1]
 
@@ -96,15 +94,13 @@ def test_ingest_window_stats(spark, tmp_path):
     _write_hits(spark, hits_dir, in_a + in_b)
     _write_hits(spark, hits_dir, flush)
 
-    q = start_ingest(spark, hits_dir, out, ckpt, watermark="1 minutes")
-    q.awaitTermination(180)
+    drain(start_ingest(spark, hits_dir, out, ckpt, watermark="1 minutes"))
 
     # a hit for window A arriving after the watermark passed: the restarted
     # query recovers the watermark from the checkpoint and drops it
     late = [_hit(1, 0, 1000, T0 + dt.timedelta(seconds=3))]
     _write_hits(spark, hits_dir, late)
-    q2 = start_ingest(spark, hits_dir, out, ckpt, watermark="1 minutes")
-    q2.awaitTermination(180)
+    drain(start_ingest(spark, hits_dir, out, ckpt, watermark="1 minutes"))
     stats = {(r["window_start"].second, r["window_start"].minute): r
              for r in spark.read.parquet(out).collect()}
     a = stats[(0, 0)]
@@ -123,8 +119,7 @@ def test_ledger_foreachbatch(spark, tmp_path):
     _write_hits(spark, hits_dir,
                 [_hit(1, 0, i, T0 + dt.timedelta(seconds=i)) for i in range(7)]
                 + [_hit(1, 1, i, T0 + dt.timedelta(seconds=i)) for i in range(3)])
-    q = start_ledger_sink(spark, hits_dir, ledger, ckpt)
-    q.awaitTermination(120)
+    drain(start_ledger_sink(spark, hits_dir, ledger, ckpt))
     rows = {(r["run"], r["rb"]): r["n_hits"]
             for r in spark.read.parquet(ledger).collect()}
     assert rows == {(1, 0): 7, (1, 1): 3}
@@ -139,8 +134,8 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     base = [_hit(1, 0, 1, T0), _hit(1, 0, 1, T0 + dt.timedelta(milliseconds=10)),
             _hit(1, 0, 2, T0 + dt.timedelta(seconds=1))]
     _write_hits(spark, hits_dir, base)
-    q = start_dedup_stream(spark, hits_dir, out, ckpt, watermark="1 minutes")
-    q.awaitTermination(120)
+    drain(start_dedup_stream(spark, hits_dir, out, ckpt,
+                             watermark="1 minutes"))
     got = spark.read.parquet(out)
     assert got.count() == 2  # duplicate of event 1 dropped
     assert sorted(r["event_id"] for r in got.collect()) == [1, 2]
@@ -164,8 +159,7 @@ def test_event_counter_reset(spark, tmp_path, use_stream):
         out = str(tmp_path / "out")
         ckpt = str(tmp_path / "ckpt")
         sdf.coalesce(1).write.parquet(sig_dir)
-        q = start_event_counter(spark, sig_dir, out, ckpt)
-        q.awaitTermination(180)
+        drain(start_event_counter(spark, sig_dir, out, ckpt))
         got = {(r["etroc"], r["seq"]): r["event_cnt"]
                for r in spark.read.parquet(out).collect()}
     else:
@@ -283,9 +277,57 @@ def test_tws_output_equals_groupstate_twin(spark, tmp_path):
     for name, starter in (("gs", start_event_counter),
                           ("tws", start_event_counter_tws)):
         out = str(tmp_path / f"out_{name}")
-        q = starter(spark, sig_dir, out, str(tmp_path / f"ckpt_{name}"))
-        q.awaitTermination(180)
+        drain(starter(spark, sig_dir, out,
+                      str(tmp_path / f"ckpt_{name}")))
         outs[name] = {(r["etroc"], r["seq"]): r["event_cnt"]
                       for r in spark.read.parquet(out).collect()}
     assert outs["tws"] == outs["gs"]
     assert len(outs["gs"]) == len(signals)
+
+
+class _HungQuery:
+    """A started query that never finishes: ``awaitTermination`` times out."""
+    name, id = "hung", "0000"
+
+    def __init__(self):
+        self.waited, self.stopped = None, False
+
+    def awaitTermination(self, timeout):
+        self.waited = timeout
+        return False
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_drain_stops_and_raises_on_timeout():
+    """A drain that times out must stop the query and raise, never fall
+    through to a read of a half-written sink."""
+    q = _HungQuery()
+    with pytest.raises(TimeoutError, match="hung"):
+        drain(q)
+    assert q.stopped and q.waited == DRAIN_TIMEOUT_S
+
+
+def test_every_bounded_stream_goes_through_the_shared_drain():
+    """The drain and the parquet file-sink layout are defined once, in
+    ``project_etl_spark.streaming``: no other module waits on a query or
+    builds its own parquet stream sink."""
+    import glob
+    import os
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "project_etl_spark")
+    policy = os.path.join(pkg, "streaming", "__init__.py")
+    wait = re.compile(r"\.awaitTermination\(")
+    sink = re.compile(r"writeStream\s*\.format\(\s*[\"']parquet")
+    bad = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == policy:
+            continue
+        with open(path) as fh:
+            src = fh.read()
+        bad += [f"{os.path.relpath(path, pkg)}: {pat.pattern}"
+                for pat in (wait, sink) if pat.search(src)]
+    assert not bad, bad
