@@ -387,7 +387,7 @@ def ext_image_phash_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``mapInPandas`` decode pass (bytes never shuffle), census windows over
     a 15-bit key — bounded state; hash-checked end to end via the golden
     fixture computed by a fully independent plain-loop pure-Python DCT
-    twin over independently assembled payloads (tools/gen_golden_phash.py
+    twin over independently assembled payloads (tools/gen_golden.py
     + tools/spectral_twins.ppm_phash_py — no shared code with this
     kernel; sensitivity proven in tests/test_round10_fixes.py)."""
     ensure_deterministic(spark)
@@ -593,7 +593,7 @@ def ext_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one Arrow-batched ``mapInPandas`` pass per blob (run-length
     encoding is a vectorized diff, no per-frame Python), per-clip bounded
     output. Hash-checked against a golden fixture computed over
-    independently assembled payloads (tools/gen_golden_vad.py)."""
+    independently assembled payloads (tools/gen_golden.vad_for)."""
     ensure_deterministic(spark)
     from project_etl_spark.session import _ship_package
     _ship_package(spark)
@@ -809,7 +809,7 @@ def ext_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Scale: one ``mapInPandas`` decode pass (bytes never shuffle),
     census windows over a 16-bit key — bounded state; hash-checked end
     to end via the golden fixture computed over independently assembled
-    payloads (tools/gen_golden_dhash.py)."""
+    payloads (tools/gen_golden.py)."""
     ensure_deterministic(spark)
     from project_etl_spark.session import _ship_package
     _ship_package(spark)
@@ -894,7 +894,7 @@ def ext_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     any transcription or embedding spend. One ``mapInPandas`` pass,
     bytes never shuffle, all-integer kernel; hash-checked end to end via
     the golden fixture computed over independently assembled payloads
-    (tools/gen_golden_clipping.py)."""
+    (tools/gen_golden.clipping_for)."""
     ensure_deterministic(spark)
     from project_etl_spark.session import _ship_package
     _ship_package(spark)
@@ -1147,7 +1147,7 @@ def ext_image_channel_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie order — no floats in the kernel at all. Hash-checked end to end
     via the golden fixture computed over independently assembled
     payloads with a pure-Python histogram twin
-    (tools/gen_golden_channel_hist.py).
+    (tools/gen_golden.channel_hist_py).
 
     Scale shape: one ``mapInPandas`` decode pass — bytes never shuffle;
     the output is 15 small integers per image."""
@@ -1235,7 +1235,7 @@ def ext_audio_gain_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dB close in fixed-order expressions over exact integers — log₁₀
     as LN/LN(10), inside the cross-engine ln/sqrt contract. Golden
     fixture from a pure-Python sum-of-squares twin over independently
-    assembled payloads (tools/gen_golden_gain.py).
+    assembled payloads (tools/gen_golden.sum_sq_py).
 
     Scale shape: one mapInPandas decode pass, bytes never shuffle; two
     small integers per clip cross the Arrow boundary."""
@@ -1341,7 +1341,7 @@ def ext_image_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-quantized INSIDE the kernel so every emitted value is int64;
     the quartile NTILE orders by (h_micro, doc_id). Hash-checked end to
     end via the golden fixture computed over independently assembled
-    payloads with plain-Python loops (tools/gen_golden_entropy.py).
+    payloads with plain-Python loops (tools/gen_golden.luma_entropy_py).
 
     Scale shape: one ``mapInPandas`` decode pass (bytes never shuffle,
     the multimodal-family invariant); the quartile window runs over the
@@ -1459,7 +1459,7 @@ def ext_audio_spectral_flatness(spark: SparkSession,
     Determinism: flatness micro-quantizes INSIDE the kernel, so emitted
     values are int64; the golden fixture is generated END TO END by
     independent plain-loop pure-Python twins — payload assembly
-    (tools/gen_golden_pcm.py) AND the DFT/flatness fingerprint
+    (tools/gen_golden.pcm_payload_py) AND the DFT/flatness fingerprint
     (tools/spectral_twins.pcm_flatness_py) — so a bug in this numpy
     kernel fails the oracle. Twin/kernel agreement at the quantized
     level is swept exhaustively in tests/test_round10_fixes.py, which

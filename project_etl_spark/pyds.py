@@ -37,6 +37,8 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import uuid
 from collections.abc import Iterator, Sequence
 
 from dataclasses import dataclass, field
@@ -241,12 +243,16 @@ class _FragmentSink:
     """The fragment bookkeeping both writers share. Executors group their
     rows by (run, rb), pack them with the shared 40-bit packer
     (``decode.encode_frames`` — the same single source of truth the
-    golden-fixture generator uses) and write TEMP fragments under
-    ``<path>/_etl_tmp``; nothing lands under a final name. The driver
-    groups the fragments per final file and removes them afterwards."""
+    golden-fixture generator uses) and write TEMP fragments under the
+    writer's own ``<path>/_etl_tmp/<token>``; nothing lands under a final
+    name. The driver groups the fragments per final file, then removes
+    the writer's directory whole — with it any fragment of a failed or
+    speculative attempt, which no commit message names."""
 
     def __init__(self, options: dict):
         self.path = _required_path(options)
+        # made on the driver, so every task of this write shares it
+        self.tmpdir = os.path.join(self.path, "_etl_tmp", uuid.uuid4().hex)
 
     def write(self, iterator) -> _RunFilesCommit:
         from pyspark import TaskContext
@@ -256,8 +262,7 @@ class _FragmentSink:
         # zero-padded so fragment order is partition order; the attempt id
         # keeps two attempts of one task (retry, speculation) off one file
         suffix = f"part{ctx.partitionId():06d}_a{ctx.taskAttemptId()}"
-        tmpdir = os.path.join(self.path, "_etl_tmp")
-        os.makedirs(tmpdir, exist_ok=True)
+        os.makedirs(self.tmpdir, exist_ok=True)
         groups: dict[tuple, list[dict]] = {}
         for row in iterator:
             frame = {"kind": row["kind"], "elink": int(row["elink"] or 0)}
@@ -270,7 +275,8 @@ class _FragmentSink:
                               []).append(frame)
         msg = _RunFilesCommit()
         for (run, rb), frames in sorted(groups.items()):
-            tmp = os.path.join(tmpdir, f"run{run}_rb{rb}_{suffix}.tmpfrag")
+            tmp = os.path.join(self.tmpdir,
+                               f"run{run}_rb{rb}_{suffix}.tmpfrag")
             with open(tmp, "wb") as fh:
                 fh.write(encode_frames(frames))
             msg.fragments.append((run, rb, suffix, tmp))
@@ -287,16 +293,11 @@ class _FragmentSink:
                 [tmp for _, tmp in sorted(frags)]
                 for (run, rb), frags in sorted(by_key.items())}
 
-    def _cleanup(self, messages) -> None:
-        for m in filter(None, messages):
-            for *_, tmp in m.fragments:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
+    def _cleanup(self) -> None:
+        shutil.rmtree(self.tmpdir, ignore_errors=True)
         try:
-            os.rmdir(os.path.join(self.path, "_etl_tmp"))
-        except OSError:
+            os.rmdir(os.path.dirname(self.tmpdir))
+        except OSError:          # another writer's directory is still there
             pass
 
 
@@ -322,10 +323,10 @@ class RunFilesWriter(_FragmentSink, DataSourceWriter):
     def commit(self, messages) -> None:
         for final, fragments in self._final_files(messages).items():
             _concat(final, fragments, "wb")
-        self._cleanup(messages)
+        self._cleanup()
 
     def abort(self, messages) -> None:
-        self._cleanup(messages)
+        self._cleanup()
 
 
 class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
@@ -383,7 +384,7 @@ class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
         entries = self._ledger()
         if any(e["batch"] == batchId and e["phase"] == "done"
                for e in entries):
-            self._cleanup(messages)          # acknowledged replay: no-op
+            self._cleanup()          # acknowledged replay: no-op
             return
         finals = self._final_files(messages)
         intents = [e for e in entries
@@ -407,10 +408,10 @@ class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
         self._crash_hook("before_done")
         self._ledger_append({"batch": batchId, "phase": "done"})
         self._crash_hook("after_done")
-        self._cleanup(messages)
+        self._cleanup()
 
     def abort(self, messages, batchId: int) -> None:
-        self._cleanup(messages)
+        self._cleanup()
 
 
 class RunFilesDataSource(DataSource):

@@ -3,13 +3,8 @@
 
 Interleaved resets are not expressible as a windowed aggregation (SURVEY.md
 §4.2), so this is the one operator that needs arbitrary per-key state.
-Primary implementation: ``applyInPandasWithState`` (GroupState per
+Implementation: ``applyInPandasWithState`` (GroupState per
 (etroc,) key, incremented per trigger row, zeroed by reset rows).
-
-Note on ``transformWithStateInPandas`` (Spark 4's newer API): it is the
-forward path, but its state-server protocol requires ``google.protobuf``,
-which is unavailable in this runtime — the GroupState implementation below
-is semantically identical for this operator (single ValueState, no timers).
 
 A batch twin (``event_counter_batch``) computes the same semantics with a
 window carry-forward for the differential tests — streaming output must
@@ -90,76 +85,6 @@ def event_counter_batch(signals: DataFrame) -> DataFrame:
     return (with_seg
             .withColumn("event_cnt", cnt.cast("long"))
             .select("etroc", "seq", "event_cnt"))
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas forward path (gated on google.protobuf)
-# ---------------------------------------------------------------------------
-
-def tws_available() -> bool:
-    """True when Spark 4's ``transformWithStateInPandas`` can run here: its
-    Python state-server protocol is protobuf-encoded, so the API needs
-    ``google.protobuf`` in the executor Python environment."""
-    try:
-        import google.protobuf  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def start_event_counter_tws(spark: SparkSession, signals_dir: str,
-                            out_dir: str,
-                            checkpoint_dir: str) -> StreamingQuery:
-    """EVENT_CNT on the ``transformWithStateInPandas`` API — the forward
-    path for arbitrary per-key state in Spark 4 (explicit ValueState
-    handle, composable timers, state-v2 checkpoint layout). Semantically
-    identical to :func:`start_event_counter` for this operator (single
-    value state, no timers): same per-key seq-ordered counting loop, same
-    OUTPUT_SCHEMA, so on a protobuf-equipped cluster the two queries are
-    drop-in twins and must produce identical output (the shared oracle in
-    ``stream_stateful_counter`` is the contract). Raises a descriptive
-    RuntimeError in environments without ``google.protobuf`` — the
-    GroupState implementation above carries the registered semantics
-    there."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not installed in this runtime; use start_event_counter "
-            "(applyInPandasWithState) — identical semantics for this "
-            "operator.")
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    class _EventCountProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._n = handle.getValueState(
-                "n", T.StructType([T.StructField("n", T.LongType())]))
-
-        def handleInputRows(self, key, rows, timer_values):
-            n = self._n.get()[0] if self._n.exists() else 0
-            chunks = list(rows)
-            pdf = (pd.concat(chunks, ignore_index=True)
-                   if len(chunks) > 1 else chunks[0]).sort_values("seq")
-            out_seq, out_cnt = [], []
-            for is_reset, seq in zip(pdf["is_reset"], pdf["seq"]):
-                n = 0 if is_reset else n + 1
-                out_seq.append(int(seq))
-                out_cnt.append(n)
-            self._n.update((n,))
-            yield pd.DataFrame({"etroc": key[0], "seq": out_seq,
-                                "event_cnt": out_cnt})
-
-        def close(self) -> None:
-            pass
-
-    signals = spark.readStream.schema(SIGNAL_SCHEMA).parquet(signals_dir)
-    counted = (signals.groupBy("etroc")
-               .transformWithStateInPandas(
-                   statefulProcessor=_EventCountProcessor(),
-                   outputStructType=OUTPUT_SCHEMA,
-                   outputMode="Append",
-                   timeMode="None"))
-    return parquet_sink(counted, out_dir, checkpoint_dir).start()
 
 
 # ---------------------------------------------------------------------------

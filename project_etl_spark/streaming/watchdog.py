@@ -13,7 +13,8 @@ Exactly-once: the file source records consumed files in the checkpoint's
 offset log, the parquet sink commits atomically per batch — the lock-file /
 move-to-archive protocol of the reference, for free. The readiness join
 ("waits for both scope and ETROC binaries", DAQ_self-triggering.md:284) is
-``await_pairs``: a foreachBatch anti-join against the processed ledger.
+``await_pairs``: a ``groupBy(run)`` count of the distinct required boards
+over a frame of processed hits; a run is ready when every board is there.
 """
 
 from __future__ import annotations

@@ -190,9 +190,8 @@ def test_writer_abort_leaves_no_partial_files(tmp_path):
     out = str(tmp_path / "aborted")
     os.makedirs(out, exist_ok=True)
     w = RunFilesWriter({"path": out})
-    tmpdir = os.path.join(out, "_etl_tmp")
-    os.makedirs(tmpdir)
-    tmp = os.path.join(tmpdir, "run1_rb0_part0.tmpfrag")
+    os.makedirs(w.tmpdir)
+    tmp = os.path.join(w.tmpdir, "run1_rb0_part0.tmpfrag")
     with open(tmp, "wb") as fh:
         fh.write(b"\x00" * 5)
     w.abort([_RunFilesCommit(fragments=[(1, 0, 0, tmp)])])
@@ -207,6 +206,28 @@ def _frag(tmpdir, run, rb, suffix, payload: bytes) -> tuple:
     return (run, rb, suffix, p)
 
 
+@pytest.mark.parametrize("stream", [False, True])
+def test_commit_removes_fragments_named_in_no_message(tmp_path, stream):
+    """A failed or speculative attempt leaves a fragment that no commit
+    message names; commit must still build the final file from the
+    committed attempt only and leave no temp directory behind."""
+    from project_etl_spark.pyds import (
+        RunFilesStreamWriter, RunFilesWriter, _RunFilesCommit)
+
+    out = str(tmp_path)
+    w = (RunFilesStreamWriter if stream else RunFilesWriter)({"path": out})
+    _frag(w.tmpdir, 1, 0, "part000000_a0", b"XX")     # the failed attempt
+    msgs = [_RunFilesCommit(
+        fragments=[_frag(w.tmpdir, 1, 0, "part000000_a1", b"AAAAA")])]
+    if stream:
+        w.commit(msgs, batchId=0)
+    else:
+        w.commit(msgs)
+    final = os.path.join(out, "output_run_1_rb0.dat")
+    assert open(final, "rb").read() == b"AAAAA"
+    assert not os.path.exists(os.path.join(out, "_etl_tmp"))
+
+
 def test_stream_writer_commit_is_replay_idempotent(tmp_path):
     """Re-delivering an acknowledged batch (Spark retrying after a driver
     failure post-commit) must append NOTHING a second time."""
@@ -214,7 +235,7 @@ def test_stream_writer_commit_is_replay_idempotent(tmp_path):
 
     out = str(tmp_path)
     w = RunFilesStreamWriter({"path": out})
-    tmpdir = os.path.join(out, "_etl_tmp")
+    tmpdir = w.tmpdir
     w.commit([_RunFilesCommit(
         fragments=[_frag(tmpdir, 1, 0, "part0_a0", b"AAAAA")])], batchId=0)
     final = os.path.join(out, "output_run_1_rb0.dat")
@@ -235,7 +256,7 @@ def test_stream_writer_truncate_recovery_after_partial_append(tmp_path):
 
     out = str(tmp_path)
     w = RunFilesStreamWriter({"path": out})
-    tmpdir = os.path.join(out, "_etl_tmp")
+    tmpdir = w.tmpdir
     w.commit([_RunFilesCommit(
         fragments=[_frag(tmpdir, 1, 0, "part0_a0", b"AAAAA")])], batchId=0)
     final = os.path.join(out, "output_run_1_rb0.dat")

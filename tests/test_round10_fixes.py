@@ -1,8 +1,9 @@
-"""Round-10 regression tests for the round-9 VERDICT items.
+"""Regression tests for the independent golden twins, the AQE skew-join
+split and the Q11 share comparison.
 
-1. **Independent spectral fixture twins** — golden_flatness.parquet and
-   golden_phash.parquet are now generated by plain-loop pure-Python
-   DFT/DCT twins (tools/spectral_twins.py) with no code shared with the
+1. **Independent multimodal fixture twins** — every golden_*.parquet is
+   written by tools/gen_golden.py from plain-loop pure-Python twins
+   (there and in tools/spectral_twins.py) that share no code with the
    numpy kernels the queries run. Two classes of test pin this:
 
    (a) *Agreement*: twin == kernel at the quantized level, exhaustively
@@ -13,8 +14,10 @@
    (b) *Sensitivity*: a deliberate off-by-one planted in the kernel
        (the classic DFT bin-range and median-index mistakes) must
        mismatch the committed fixture on at least one real corpus row.
-       Before this round the fixture was generated BY the kernel, so
-       exactly these bugs would have passed their own fixture test.
+       A fixture generated BY the kernel would pass exactly these bugs.
+
+   tests/test_golden_fixtures.py pins that each committed file is byte
+   for byte what the generator writes.
 """
 
 from __future__ import annotations
@@ -25,10 +28,10 @@ import os
 
 import pyarrow.parquet as pq
 
+from tools.gen_golden import SF_DIRS
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "tests", "fixtures")
-SF_DIRS = ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
-           "/root/testdata/sf0.1")
 
 
 def _docs(sf_dir):
@@ -50,13 +53,13 @@ def _fixture_rows(name, cols):
 def test_flatness_twin_matches_numpy_kernel_everywhere():
     from project_etl_spark.operators.llm_multimodal import (
         pcm_spectral_flatness)
-    from tools.gen_golden_pcm import payload_for
+    from tools.gen_golden import pcm_payload_py
     from tools.spectral_twins import pcm_flatness_py
 
     n = 0
     for sf_dir in SF_DIRS:
         for doc_id, text in _docs(sf_dir):
-            blob = payload_for(doc_id, text)
+            blob = pcm_payload_py(doc_id, text)
             assert pcm_spectral_flatness(blob) == pcm_flatness_py(blob), (
                 sf_dir, doc_id)
             n += 1
@@ -65,13 +68,13 @@ def test_flatness_twin_matches_numpy_kernel_everywhere():
 
 def test_phash_twin_matches_numpy_kernel_everywhere():
     from project_etl_spark.operators.llm_multimodal import ppm_phash
-    from tools.gen_golden_ppm_stats import payload_for
+    from tools.gen_golden import ppm_payload_py
     from tools.spectral_twins import ppm_phash_py
 
     n = 0
     for sf_dir in SF_DIRS:
         for doc_id, text in _docs(sf_dir):
-            blob = payload_for(doc_id, text)
+            blob = ppm_payload_py(doc_id, text)
             assert ppm_phash(blob) == ppm_phash_py(blob), (sf_dir, doc_id)
             n += 1
     assert n >= 6000
@@ -113,7 +116,7 @@ def _buggy_flatness(blob):
 
 
 def test_planted_dft_bin_bug_fails_flatness_fixture():
-    from tools.gen_golden_pcm import payload_for
+    from tools.gen_golden import pcm_payload_py
 
     golden = _fixture_rows(
         "golden_flatness.parquet",
@@ -122,7 +125,7 @@ def test_planted_dft_bin_bug_fails_flatness_fixture():
     mismatches = 0
     for doc_id, text in _docs(SF_DIRS[0]):
         md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
-        got = _buggy_flatness(payload_for(doc_id, text))
+        got = _buggy_flatness(pcm_payload_py(doc_id, text))
         if got != golden[(doc_id, md5)]:
             mismatches += 1
     assert mismatches > 0, (
@@ -163,7 +166,7 @@ def _buggy_phash(blob):
 
 
 def test_planted_median_bug_fails_phash_fixture():
-    from tools.gen_golden_ppm_stats import payload_for
+    from tools.gen_golden import ppm_payload_py
 
     golden = _fixture_rows(
         "golden_phash.parquet",
@@ -171,7 +174,7 @@ def test_planted_median_bug_fails_phash_fixture():
     mismatches = 0
     for doc_id, text in _docs(SF_DIRS[0]):
         md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
-        got = _buggy_phash(payload_for(doc_id, text))
+        got = _buggy_phash(ppm_payload_py(doc_id, text))
         if got != golden[(doc_id, md5)]:
             mismatches += 1
     assert mismatches > 0, (
@@ -184,7 +187,7 @@ def test_planted_median_bug_fails_phash_fixture():
 # ---------------------------------------------------------------------------
 
 def test_flatness_fixture_is_twin_output_at_head():
-    from tools.gen_golden_pcm import payload_for
+    from tools.gen_golden import pcm_payload_py
     from tools.spectral_twins import pcm_flatness_py
 
     golden = _fixture_rows(
@@ -193,12 +196,12 @@ def test_flatness_fixture_is_twin_output_at_head():
          "n_tonal_frames"))
     for doc_id, text in _docs(SF_DIRS[0]):
         md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
-        assert pcm_flatness_py(payload_for(doc_id, text)) == \
+        assert pcm_flatness_py(pcm_payload_py(doc_id, text)) == \
             golden[(doc_id, md5)], doc_id
 
 
 def test_phash_fixture_is_twin_output_at_head():
-    from tools.gen_golden_ppm_stats import payload_for
+    from tools.gen_golden import ppm_payload_py
     from tools.spectral_twins import ppm_phash_py
 
     golden = _fixture_rows(
@@ -206,7 +209,7 @@ def test_phash_fixture_is_twin_output_at_head():
         ("width", "height", "phash", "n_set_bits", "dc_q"))
     for doc_id, text in _docs(SF_DIRS[0]):
         md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
-        assert ppm_phash_py(payload_for(doc_id, text)) == \
+        assert ppm_phash_py(ppm_payload_py(doc_id, text)) == \
             golden[(doc_id, md5)], doc_id
 
 
@@ -306,14 +309,14 @@ def test_q11_share_compare_needs_decimal_at_design_scale():
 def test_spatial_twins_match_numpy_kernels_everywhere():
     from project_etl_spark.operators.llm_multimodal import (
         ppm_ahash, ppm_decode, ppm_dhash)
-    from tools.gen_golden_ppm_stats import payload_for
+    from tools.gen_golden import ppm_payload_py
     from tools.spectral_twins import (
         ppm_ahash_py, ppm_decode_py, ppm_dhash_py)
 
     n = 0
     for sf_dir in SF_DIRS:
         for doc_id, text in _docs(sf_dir):
-            blob = payload_for(doc_id, text)
+            blob = ppm_payload_py(doc_id, text)
             assert ppm_ahash(blob) == ppm_ahash_py(blob), (sf_dir, doc_id)
             assert ppm_dhash(blob) == ppm_dhash_py(blob), (sf_dir, doc_id)
             assert ppm_decode(blob) == ppm_decode_py(blob), (sf_dir, doc_id)
@@ -374,7 +377,7 @@ def _buggy_dhash(blob):
 def test_planted_spatial_bugs_fail_their_fixtures():
     import pyarrow.parquet as pq_  # noqa: F401 (readability)
 
-    from tools.gen_golden_ppm_stats import payload_for
+    from tools.gen_golden import ppm_payload_py
 
     golden_a = _fixture_rows("golden_ahash.parquet",
                              ("width", "height", "ahash", "n_set_bits"))
@@ -383,7 +386,7 @@ def test_planted_spatial_bugs_fail_their_fixtures():
     mism_a = mism_d = 0
     for doc_id, text in _docs(SF_DIRS[0]):
         md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
-        blob = payload_for(doc_id, text)
+        blob = ppm_payload_py(doc_id, text)
         if _buggy_ahash(blob) != golden_a[(doc_id, md5)]:
             mism_a += 1
         if _buggy_dhash(blob) != golden_d[(doc_id, md5)]:
@@ -396,7 +399,7 @@ def test_planted_luma_coefficient_swap_fails_ppm_stats_fixture():
     """Swapping the BT.601 red/blue luma weights (0.299 <-> 0.114) is
     the classic channel-order bug; the decode fixture must catch it via
     luma_min/luma_max."""
-    from tools.gen_golden_ppm_stats import payload_for
+    from tools.gen_golden import ppm_payload_py
     from tools.spectral_twins import _ppm_parse_py
 
     tbl = _fixture_rows("golden_ppm_stats.parquet",
@@ -404,7 +407,7 @@ def test_planted_luma_coefficient_swap_fails_ppm_stats_fixture():
     mism = 0
     for doc_id, text in _docs(SF_DIRS[0]):
         md5 = hashlib.md5(text.encode("utf-8")).hexdigest()
-        blob = payload_for(doc_id, text)
+        blob = ppm_payload_py(doc_id, text)
         nl1 = blob.index(b"\n")
         nl2 = blob.index(b"\n", nl1 + 1)
         nl3 = blob.index(b"\n", nl2 + 1)

@@ -649,7 +649,7 @@ def test_image_entropy_kernel_vs_golden_twin():
     planted payloads, including the degenerate solid-color image
     (entropy exactly 0, one bin used)."""
     from project_etl_spark.operators.llm_multimodal import ppm_luma_entropy
-    from tools.gen_golden_entropy import luma_entropy_py
+    from tools.gen_golden import luma_entropy_py
 
     flat = b"P6\n4 4\n255\n" + bytes([128, 128, 128] * 16)
     varied = b"P6\n4 4\n255\n" + bytes(range(48))
@@ -800,7 +800,7 @@ def test_spectral_flatness_kernel_matches_golden_assembly():
 
     from project_etl_spark.operators.llm_multimodal import (
         pcm_spectral_flatness)
-    from tools.gen_golden_pcm import payload_for
+    from tools.gen_golden import pcm_payload_py
 
     import duckdb
     con = duckdb.connect()
@@ -814,7 +814,7 @@ def test_spectral_flatness_kernel_matches_golden_assembly():
     rows = tbl.to_pylist()
     row = next(r for r in rows
                if r["doc_id"] == doc_id and r["text_md5"] == text_md5)
-    m = pcm_spectral_flatness(payload_for(doc_id, text))
+    m = pcm_spectral_flatness(pcm_payload_py(doc_id, text))
     for kcol in ("n_frames", "mean_flatness_micro", "min_flatness_micro",
                  "n_tonal_frames"):
         assert m[kcol] == row[kcol]

@@ -231,60 +231,6 @@ def test_stream_stream_join_outer_flushes_gap_orphans(spark):
     assert rows[None] == (20, 10)
 
 
-def test_tws_forward_path_gated(spark, tmp_path):
-    """The transformWithStateInPandas twin exists as real code but is
-    gated on google.protobuf: in this container the gate must report
-    unavailable and the entry point must raise the descriptive error
-    (NOT an opaque protobuf ImportError mid-query)."""
-    import pytest
-
-    from project_etl_spark.streaming.stateful import (
-        start_event_counter_tws, tws_available)
-
-    if tws_available():
-        pytest.skip("protobuf present: the gated path would actually run")
-    with pytest.raises(RuntimeError, match="google.protobuf"):
-        start_event_counter_tws(spark, str(tmp_path / "sig"),
-                                str(tmp_path / "out"),
-                                str(tmp_path / "ckpt"))
-
-
-def test_tws_output_equals_groupstate_twin(spark, tmp_path):
-    """Wherever google.protobuf exists, the transformWithStateInPandas
-    forward path must produce EXACTLY the GroupState twin's output on
-    the interleaved-reset signal set (the drop-in-twin contract from the
-    stateful module docstring). Skips — with the gate as the reason —
-    in protobuf-less runtimes, where test_tws_forward_path_gated pins
-    the descriptive error instead."""
-    import pytest
-
-    from project_etl_spark.streaming.stateful import (
-        start_event_counter, start_event_counter_tws, tws_available)
-
-    if not tws_available():
-        pytest.skip("google.protobuf absent: transformWithStateInPandas "
-                    "state-server protocol cannot run here")
-    signals = [
-        (0, 1, False, T0), (0, 2, False, T0), (0, 3, True, T0),
-        (0, 4, False, T0), (0, 5, False, T0),
-        (1, 1, False, T0), (1, 2, True, T0), (1, 3, False, T0),
-    ]
-    sdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(signals, 1), schema=SIGNAL_SCHEMA)
-    sig_dir = str(tmp_path / "signals")
-    sdf.coalesce(1).write.parquet(sig_dir)
-    outs = {}
-    for name, starter in (("gs", start_event_counter),
-                          ("tws", start_event_counter_tws)):
-        out = str(tmp_path / f"out_{name}")
-        drain(starter(spark, sig_dir, out,
-                      str(tmp_path / f"ckpt_{name}")))
-        outs[name] = {(r["etroc"], r["seq"]): r["event_cnt"]
-                      for r in spark.read.parquet(out).collect()}
-    assert outs["tws"] == outs["gs"]
-    assert len(outs["gs"]) == len(signals)
-
-
 class _HungQuery:
     """A started query that never finishes: ``awaitTermination`` times out."""
     name, id = "hung", "0000"

@@ -111,11 +111,11 @@ def test_pcm_payload_roundtrips_spark_vs_python(spark, sf_dir):
     produce byte-identical blobs (the precondition of the golden oracle)."""
     from project_etl_spark.io import table
     from project_etl_spark.operators.llm_multimodal import pcm_payloads
-    from tools.gen_golden_pcm import payload_for
+    from tools.gen_golden import pcm_payload_py
     rows = (pcm_payloads(table(spark, sf_dir, "documents").limit(20))
             .collect())
     texts = {r["doc_id"]: r["text"] for r in
              table(spark, sf_dir, "documents").limit(20).collect()}
     for r in rows:
-        assert bytes(r["payload"]) == payload_for(r["doc_id"],
+        assert bytes(r["payload"]) == pcm_payload_py(r["doc_id"],
                                                   texts[r["doc_id"]])
