@@ -246,12 +246,14 @@ class _FragmentSink:
     golden-fixture generator uses) and write TEMP fragments under the
     writer's own ``<path>/_etl_tmp/<token>``; nothing lands under a final
     name. The driver groups the fragments per final file, then removes
-    the writer's directory whole — with it any fragment of a failed or
+    the tasks' directory whole — with it any fragment of a failed or
     speculative attempt, which no commit message names."""
 
     def __init__(self, options: dict):
         self.path = _required_path(options)
-        # made on the driver, so every task of this write shares it
+        # one per instance: the tasks write under the instance the driver
+        # pickled to them; a batch commit unpickles that same instance, a
+        # stream commit builds its own and finds theirs via the messages
         self.tmpdir = os.path.join(self.path, "_etl_tmp", uuid.uuid4().hex)
 
     def write(self, iterator) -> _RunFilesCommit:
@@ -293,11 +295,18 @@ class _FragmentSink:
                 [tmp for _, tmp in sorted(frags)]
                 for (run, rb), frags in sorted(by_key.items())}
 
-    def _cleanup(self) -> None:
-        shutil.rmtree(self.tmpdir, ignore_errors=True)
+    def _cleanup(self, messages) -> None:
+        """Remove this instance's temp directory and every one a message
+        names — whole, so a fragment no message names goes too — then
+        ``_etl_tmp`` if no other writer's directory is left in it."""
+        dirs = {self.tmpdir} | {os.path.dirname(tmp)
+                                for m in filter(None, messages)
+                                for *_, tmp in m.fragments}
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
         try:
-            os.rmdir(os.path.dirname(self.tmpdir))
-        except OSError:          # another writer's directory is still there
+            os.rmdir(os.path.join(self.path, "_etl_tmp"))
+        except OSError:
             pass
 
 
@@ -323,10 +332,10 @@ class RunFilesWriter(_FragmentSink, DataSourceWriter):
     def commit(self, messages) -> None:
         for final, fragments in self._final_files(messages).items():
             _concat(final, fragments, "wb")
-        self._cleanup()
+        self._cleanup(messages)
 
     def abort(self, messages) -> None:
-        self._cleanup()
+        self._cleanup(messages)
 
 
 class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
@@ -384,7 +393,7 @@ class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
         entries = self._ledger()
         if any(e["batch"] == batchId and e["phase"] == "done"
                for e in entries):
-            self._cleanup()          # acknowledged replay: no-op
+            self._cleanup(messages)  # acknowledged replay: no-op
             return
         finals = self._final_files(messages)
         intents = [e for e in entries
@@ -408,10 +417,10 @@ class RunFilesStreamWriter(_FragmentSink, DataSourceStreamWriter):
         self._crash_hook("before_done")
         self._ledger_append({"batch": batchId, "phase": "done"})
         self._crash_hook("after_done")
-        self._cleanup()
+        self._cleanup(messages)
 
     def abort(self, messages, batchId: int) -> None:
-        self._cleanup()
+        self._cleanup(messages)
 
 
 class RunFilesDataSource(DataSource):

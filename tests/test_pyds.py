@@ -210,19 +210,22 @@ def _frag(tmpdir, run, rb, suffix, payload: bytes) -> tuple:
 def test_commit_removes_fragments_named_in_no_message(tmp_path, stream):
     """A failed or speculative attempt leaves a fragment that no commit
     message names; commit must still build the final file from the
-    committed attempt only and leave no temp directory behind."""
+    committed attempt only and leave no temp directory behind. As in
+    Spark, a batch commit runs on the tasks' (unpickled) writer, a stream
+    commit on a writer built apart from it."""
     from project_etl_spark.pyds import (
         RunFilesStreamWriter, RunFilesWriter, _RunFilesCommit)
 
     out = str(tmp_path)
-    w = (RunFilesStreamWriter if stream else RunFilesWriter)({"path": out})
-    _frag(w.tmpdir, 1, 0, "part000000_a0", b"XX")     # the failed attempt
+    cls = RunFilesStreamWriter if stream else RunFilesWriter
+    tasks = cls({"path": out})
+    _frag(tasks.tmpdir, 1, 0, "part000000_a0", b"XX")  # the failed attempt
     msgs = [_RunFilesCommit(
-        fragments=[_frag(w.tmpdir, 1, 0, "part000000_a1", b"AAAAA")])]
+        fragments=[_frag(tasks.tmpdir, 1, 0, "part000000_a1", b"AAAAA")])]
     if stream:
-        w.commit(msgs, batchId=0)
+        cls({"path": out}).commit(msgs, batchId=0)
     else:
-        w.commit(msgs)
+        tasks.commit(msgs)
     final = os.path.join(out, "output_run_1_rb0.dat")
     assert open(final, "rb").read() == b"AAAAA"
     assert not os.path.exists(os.path.join(out, "_etl_tmp"))
@@ -382,3 +385,6 @@ def test_stream_sink_exactly_once_across_crash_points(spark, tmp_path,
         dones = [e["batch"] for e in map(json.loads, fh)
                  if e["phase"] == "done"]
     assert sorted(dones) == [0, 1, 2]
+    # every committed micro-batch removed its temp fragments
+    for side in (base, ctrl):
+        assert not os.path.exists(os.path.join(side["out"], "_etl_tmp"))
